@@ -25,6 +25,10 @@ def _load_reference():
 
 @pytest.fixture(scope="session")
 def refmod():
+    if not os.path.exists(REFERENCE_PATH):
+        pytest.skip(f"reference detector absent ({REFERENCE_PATH}); the "
+                    "kernel cases are replayed from recorded outputs by "
+                    "tests/test_kernel_golden.py")
     return _load_reference()
 
 

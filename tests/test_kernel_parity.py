@@ -15,66 +15,14 @@ import pytest
 
 from hidden_characters_detector_spark.functions import kernel
 from hidden_characters_detector_spark.functions.kernel import DetectorConfig
-
-# --- the FIXTURES.md pattern matrix ----------------------------------------
-PATTERNS = {
-    "zwsp_embed": "Hello​world and mid‌word j‍oin w⁠ord",
-    "bom_lead": "﻿leading bom line\nsecond line",
-    "bom_mid": "first\n﻿second line with ﻿ mid",
-    "bidi_override": "user‮txt.exe and ⁦iso⁧late⁨s⁩ "
-                     "‪emb‫ed‬s‭!",
-    "nbsp_precedence": "A B",
-    "exotic_spaces": "a b c d e f g h"
-                     " i j k l m n　o"
-                     "᠎p͏q­r",
-    "variation_selectors": "x︀y︍z᠋᠌᠍ end",
-    "emoji_vs16": "hi ❤️ there",
-    "fe0f_linestart": "line one\n️starts line two",
-    "ivs_range": "一\U000e0101 and 丁\U000e0100 丂\U000e01ef",
-    "smart_quotes": "“text” and ‘more’",
-    "dashes": "a–b—c‒d―e−f﹣g⁒h‐"
-              "i‑j",
-    "expansion": "a‥b and ell…ipsis",
-    "dead_rules": "dots… bullet• low„quote",
-    "homoglyph_mixed": "Аpple соde",
-    "fullwidth_punct": "！？：；，．／＇",
-    "greek_question": "why;",
-    "detect_only_typo": "tri⁙colon four⁚dot áccent "
-                        "mˈark trip‴rime",
-    "clean_text": "plain ascii text with no markers at all",
-    "multiline": "one​two\nthree—four\n\nfinal‍\n",
-    "trailing_marker_before_newline": "end​\nnext",
-    "empty": "",
-    "only_markers": "​‌‍",
-    "newline_only": "\n\n\n",
-    "apostrophes": "caf´e pri′me dou″ble rev‵ r‶ "
-                   "comʻma apʼo ringʾ f＇w",
-    "commas_slashes": "a،b‚c﹐d，e f⁄g∕h／i",
-    "dots": "m·id b∙op tri‣b one․dot hy‧p id。"
-            "full sm﹒all f．ull",
-    "colons": "s﹕c s﹖s f：c f；s",
-    "bang": "clickǃ full！",
-    "primes_detect_only": "tr‴iple",
-}
-
-FLAG_MATRIX = [
-    dict(clean=True, check_typographic=True, check_ivs=True),
-    dict(clean=True, check_typographic=False, check_ivs=False),
-    dict(clean=True, check_typographic=True, check_ivs=False),
-    dict(clean=False, check_typographic=True, check_ivs=True),
-    dict(clean=False, check_typographic=False, check_ivs=False),
-]
+from kernel_cases import (BASE_POOL, EXCLUDED_TEXT, FLAG_MATRIX,
+                          MARKER_POOL, PATTERNS, WORD_MODE_TEXT, config,
+                          flags_id, random_rows, sweep_text)
 
 
 def run_both(oracle, text, **flags):
     exp = oracle.run(text, **flags)
-    cfg = DetectorConfig(
-        clean=flags.get("clean", True),
-        check_typographic=flags.get("check_typographic", True),
-        check_ivs=flags.get("check_ivs", True),
-        exclude_word_chars=flags.get("exclude_word_chars", False),
-        excluded=frozenset(flags.get("excluded", frozenset())),
-    )
+    cfg = config(flags)
     toks = [ord(c) for c in text]
     res = kernel.clean_rows([toks], cfg, emit_events=True)
     got_tokens = res.out_tokens[
@@ -83,9 +31,7 @@ def run_both(oracle, text, **flags):
 
 
 @pytest.mark.parametrize("name", sorted(PATTERNS))
-@pytest.mark.parametrize("flags", FLAG_MATRIX,
-                         ids=lambda f: f"c{int(f['clean'])}t"
-                         f"{int(f['check_typographic'])}i{int(f['check_ivs'])}")
+@pytest.mark.parametrize("flags", FLAG_MATRIX, ids=flags_id)
 def test_pattern_parity(oracle, name, flags):
     text = PATTERNS[name]
     exp, res, got = run_both(oracle, text, **flags)
@@ -96,9 +42,9 @@ def test_pattern_parity(oracle, name, flags):
 
 
 def test_excluded_chars(oracle):
-    text = "zw​sp and nb sp"
-    exp, res, got = run_both(oracle, text, clean=True, check_typographic=True,
-                             check_ivs=True, excluded=frozenset({0x200B}))
+    exp, res, got = run_both(oracle, EXCLUDED_TEXT, clean=True,
+                             check_typographic=True, check_ivs=True,
+                             excluded=frozenset({0x200B}))
     assert got == exp["tokens_clean"]
     assert 0x200B in got                          # ZWSP untouched
     assert 0x00A0 not in got                      # NBSP removed
@@ -106,11 +52,11 @@ def test_excluded_chars(oracle):
 
 
 def test_word_mode(oracle):
-    text = "“quoted” en–dash nb sp ell…ipsis"
-    exp, res, got = run_both(oracle, text, clean=True, check_typographic=True,
-                             check_ivs=True, exclude_word_chars=True)
+    exp, res, got = run_both(oracle, WORD_MODE_TEXT, clean=True,
+                             check_typographic=True, check_ivs=True,
+                             exclude_word_chars=True)
     assert got == exp["tokens_clean"]
-    assert got == [ord(c) for c in text]  # everything untouched
+    assert got == [ord(c) for c in WORD_MODE_TEXT]  # everything untouched
 
 
 def test_bom_detect_only_unreported(oracle):
@@ -165,40 +111,12 @@ def test_multirow_batch(oracle):
     assert res.ev_offsets[-1] == res.n_detected.sum()
 
 
-MARKER_POOL = (
-    [0x200B, 0x200C, 0x200D, 0x2060, 0xFEFF, 0x00A0, 0x202F, 0x202E, 0x2066,
-     0xFE00, 0xFE0F, 0x180B, 0x00AD, 0x2063]
-    + [0x2013, 0x2014, 0x2018, 0x2019, 0x201C, 0x201D, 0x2025, 0x2026,
-       0x2022, 0x2059, 0x0410, 0x0441, 0x043E, 0xFF01, 0x037E, 0x0301]
-    + [0xE0100, 0xE0150, 0xE01EF]
-)
-BASE_POOL = [ord(c) for c in
-             "abcdefghijklmnopqrstuvwxyz ABCDEFXYZ0123456789.,!?-'\"\t"] \
-    + [0x4E2D, 0x6587, 0x1F600, 0x2764, 0x00E9]
-
-
 @pytest.mark.parametrize("seed", range(6))
 @pytest.mark.parametrize("flags", FLAG_MATRIX[:4],
                          ids=["full", "hidden_only", "no_ivs", "detect"])
 def test_randomized_differential(oracle, seed, flags):
-    rng = random.Random(42 + seed)
-    rows = []
-    for _ in range(30):
-        n = rng.randint(0, 60)
-        toks = []
-        for _ in range(n):
-            r = rng.random()
-            if r < 0.25:
-                toks.append(rng.choice(MARKER_POOL))
-            elif r < 0.30:
-                toks.append(0x0A)
-            else:
-                toks.append(rng.choice(BASE_POOL))
-        rows.append(toks)
-    cfg = DetectorConfig(clean=flags["clean"],
-                         check_typographic=flags["check_typographic"],
-                         check_ivs=flags["check_ivs"])
-    res = kernel.clean_rows(rows, cfg)
+    rows = random_rows(seed)
+    res = kernel.clean_rows(rows, config(flags))
     for i, toks in enumerate(rows):
         text = "".join(map(chr, toks))
         exp = oracle.run(text, **flags)
@@ -209,17 +127,10 @@ def test_randomized_differential(oracle, seed, flags):
         assert bool(res.had_marker[i]) == exp["had_marker"], (i, toks)
 
 
-@pytest.mark.parametrize("flags", FLAG_MATRIX,
-                         ids=lambda f: f"c{int(f['clean'])}t"
-                         f"{int(f['check_typographic'])}i{int(f['check_ivs'])}")
+@pytest.mark.parametrize("flags", FLAG_MATRIX, ids=flags_id)
 def test_exhaustive_marker_sweep(oracle, flags):
     """Every marker codepoint in the inventory, each in ascii context."""
-    from hidden_characters_detector_spark import markers as mk
-    cps = sorted(mk.HIDDEN_CODEPOINTS | mk.TYPOGRAPHIC_CODEPOINTS
-                 | {mk.IVS_LO, mk.IVS_LO + 1, mk.IVS_HI}
-                 | {0x2026, 0x2022, 0x201E})  # dead rules too
-    text = "x".join(chr(cp) for cp in cps)
-    exp, res, got = run_both(oracle, text, **flags)
+    exp, res, got = run_both(oracle, sweep_text(), **flags)
     assert got == exp["tokens_clean"]
     assert int(res.n_detected[0]) == exp["n_detected"]
     assert int(res.n_processed[0]) == exp["n_processed"]

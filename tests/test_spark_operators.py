@@ -249,3 +249,44 @@ def test_event_cols_pruning(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="unknown event columns"):
         detect_events(df, event_cols=["nope"])
+
+
+PARITY_DOCS = [
+    ("p1", "He​llo Аpple\nline﻿2 “q” a‥b\n"),
+    ("p2", "﻿bom lead\n\nx y tri⁙colon\n"),
+    ("p3", None),
+    ("p4", ""),
+    ("p5", "plain\nascii\n"),
+    ("p6", "一\U000e0101 — … end‍"),
+]
+
+
+@pytest.mark.parametrize("cfg", [FULL_CLEAN, DetectorConfig(clean=False)],
+                         ids=["clean", "detect"])
+def test_text_operators_match_token_operators(spark, cfg):
+    """The fused text operators equal tokenize -> token operator, column
+    for column, on a multi-line corpus with a NULL and an empty text."""
+    from hidden_characters_detector_spark.operators.clean import (
+        EVENT_COL_TYPES, clean_documents, document_events)
+    from hidden_characters_detector_spark.operators.text_ops import tokenize
+
+    docs = spark.createDataFrame(PARITY_DOCS, "doc_id string, text string") \
+        .coalesce(1)
+    fused = clean_documents(docs, cfg=cfg, emit_text=False)
+    chained = clean_detect(tokenize(docs), cfg)
+    assert sorted(fused.columns) == sorted(chained.columns)
+    a = {r["doc_id"]: r.asDict() for r in fused.collect()}
+    b = {r["doc_id"]: r.asDict() for r in chained.collect()}
+    assert a == b and len(a) == len(PARITY_DOCS)
+    assert a["p3"]["tokens_clean"] == [] and a["p1"]["n_detected"] > 0
+
+    cols = ["doc_id"] + [n for n, _ in EVENT_COL_TYPES]
+
+    def events(df):
+        return sorted((tuple(r) for r in df.select(cols).collect()),
+                      key=lambda t: (t[0], t[1], t[2]))
+
+    fused_ev = events(document_events(docs, cfg=cfg))
+    assert fused_ev == events(detect_events(tokenize(docs), cfg))
+    assert {t[0] for t in fused_ev} == {"p1", "p2", "p6"}
+
