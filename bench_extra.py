@@ -27,10 +27,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
-os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(256 << 20))
+from hidden_characters_detector_spark.functions.kernel import (  # noqa: E402
+    pin_allocator_env)
+
+pin_allocator_env()
 os.environ.setdefault("MALLOC_TOP_PAD_", str(128 << 20))
-os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
 
 
 def _best_of(fn, n=3):
@@ -81,8 +82,9 @@ def clean_decomposition() -> None:
 
     from hidden_characters_detector_spark.functions import kernel
     from hidden_characters_detector_spark.functions.kernel import FULL_CLEAN
-    from hidden_characters_detector_spark.operators.clean import (
-        _flat_tokens, clean_detect)
+    from hidden_characters_detector_spark.operators.clean import clean_detect
+    from hidden_characters_detector_spark.sources.synth import (
+        lists_to_flat_tokens)
 
     spark = bench.build_spark(bench.CPUS)
     try:
@@ -105,7 +107,7 @@ def clean_decomposition() -> None:
         def co_run(batches: Iterator[pa.RecordBatch]
                    ) -> Iterator[pa.RecordBatch]:
             for batch in batches:
-                toks, offsets = _flat_tokens(batch.column("tokens"))
+                toks, offsets = lists_to_flat_tokens(batch.column("tokens"))
                 res = kernel.clean_flat(toks, offsets, FULL_CLEAN)
                 yield pa.RecordBatch.from_arrays(
                     [batch.column(c) for c in passthrough]

@@ -11,19 +11,27 @@ Design (SURVEY.md §7.5):
 
 * classification is a one-gather LUT (``uint8[0x110000]``) instead of set
   membership — hidden / IVS / typographic resolved in O(1) per token;
-* line structure (the reference processes files line by line, line number and
-  in-line index feed the BOM and VS16 rules) is recovered with
-  ``np.maximum.accumulate`` over scattered line-start seeds;
+* line structure (the reference processes files line by line; line number
+  and in-line index feed the BOM and VS16 rules, the per-line ``processed``
+  quirk and the event positions) is computed **sparsely**, at marker and
+  newline positions only: for marker-free spans the kernel touches each
+  token twice (classify gather + output copy);
+* temporaries stay int32/int8/bool where possible, which roughly halves
+  memory traffic, the binding resource on slow-memory hosts;
 * 1→N replacement expansion is a cumsum of per-token output lengths followed
   by at most ``MAX_REPLACEMENT_LEN`` masked scatters (replacements are ≤3
-  codepoints), so cleaned rows can be longer than inputs without any loop
-  over rows;
+  codepoints, :func:`scatter_replacements`), so cleaned rows can be longer
+  than inputs without any loop over rows;
 * the per-file count quirk (``processed`` counts *all* reports on a changed
-  line, ref :750-753) is reproduced with line-grouped bincounts.
+  line, ref :750-753) is reproduced by grouping reports by line start.
+
+``tests/dense_kernel.py`` keeps a dense per-token implementation of the same
+contract as the differential reference for this one.
 """
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -31,24 +39,42 @@ import numpy as np
 from .. import markers
 
 
+# glibc malloc thresholds that keep freed kernel temporaries resident
+MALLOC_TRIM_THRESHOLD = 1 << 30
+MALLOC_MMAP_THRESHOLD = 256 << 20
+
+
 def _tune_malloc() -> None:
     """Keep freed kernel temps resident (runtime mallopt, glibc only).
 
-    This sandbox's lazily-backed VM memory makes fresh page writes cost
-    ~0.5 ms each; without pinning the trim/mmap thresholds every Arrow batch
-    re-faults its temporaries (10-30x slowdowns).  Runs at import time in
-    every Python worker, so it applies even when the driver env was not
-    prepared (e.g. an externally created SparkSession).  No-op off glibc.
+    On hosts with lazily-backed VM memory a fresh page write costs ~0.5 ms;
+    without pinning the trim/mmap thresholds every Arrow batch re-faults
+    its temporaries (10-30x slowdowns).  Runs at import time in every
+    Python worker, so it applies even when the driver env was not prepared
+    (e.g. an externally created SparkSession).  No-op off glibc.
     """
     try:  # pragma: no cover - environment dependent
         import ctypes
 
         libc = ctypes.CDLL("libc.so.6", use_errno=True)
         M_TRIM_THRESHOLD, M_MMAP_THRESHOLD = -1, -3
-        libc.mallopt(M_TRIM_THRESHOLD, 1 << 30)
-        libc.mallopt(M_MMAP_THRESHOLD, 256 << 20)
+        libc.mallopt(M_TRIM_THRESHOLD, MALLOC_TRIM_THRESHOLD)
+        libc.mallopt(M_MMAP_THRESHOLD, MALLOC_MMAP_THRESHOLD)
     except Exception:
         pass
+
+
+def pin_allocator_env() -> None:
+    """Export the same thresholds (and Arrow's system pool) to processes
+    started after this call: the JVM and the Python workers it forks.
+
+    Call it before the SparkSession starts.  pyarrow's own pool
+    (jemalloc/mimalloc) returns memory to the OS via madvise, re-faulting
+    pages every batch, so Arrow uses glibc and its pinned thresholds.
+    """
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(MALLOC_TRIM_THRESHOLD))
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(MALLOC_MMAP_THRESHOLD))
+    os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
 
 
 _tune_malloc()
@@ -130,7 +156,6 @@ class DetectorConfig:
 
 
 FULL_CLEAN = DetectorConfig()
-DETECT_ONLY = DetectorConfig(clean=False)
 
 
 def parse_excluded_chars(vals: list[str] | tuple[str, ...]) -> frozenset[int]:
@@ -190,26 +215,15 @@ class KernelResult:
     ev_action: np.ndarray = field(default=None)   # ACT_* codes
 
 
-def _line_structure(toks, offsets, lengths, n):
-    """Per-token (line_start_pos, idx_in_line, line_no); all vectorized.
-
-    Lines reset at row starts and after each 0x0A token (the reference reads
-    files line-by-line with the trailing newline attached, ref :740-742).
-    """
-    g = np.arange(n, dtype=np.int64)
-    row_start = np.repeat(offsets[:-1], lengths)
-    # scatter line-start seeds, then forward-fill with maximum.accumulate
-    seed = np.full(n, -1, dtype=np.int64)
-    nz = offsets[:-1][lengths > 0]
-    seed[nz] = nz
-    after_nl = g[toks == markers.NEWLINE] + 1
-    after_nl = after_nl[after_nl < n]
-    seed[after_nl] = after_nl  # row starts re-seed identically; harmless
-    line_start = np.maximum.accumulate(seed)
-    idx_in_line = g - line_start
-    nl_cum = np.concatenate([[0], np.cumsum(toks == markers.NEWLINE)])
-    line_no = 1 + nl_cum[g] - nl_cum[row_start]
-    return row_start, line_start, idx_in_line, line_no
+def scatter_replacements(out: np.ndarray, starts: np.ndarray,
+                         cps: np.ndarray) -> None:
+    """Write the live replacement of each codepoint ``cps[j]`` into ``out``
+    from position ``starts[j]`` on (the 1→N expansion: at most
+    ``MAX_REPLACEMENT_LEN`` masked scatters, no loop over rows)."""
+    ridx, rl = REPL_IDX_LUT[cps], REPL_LEN_LUT[cps]
+    for k in range(markers.MAX_REPLACEMENT_LEN):
+        sel = rl > k
+        out[starts[sel] + k] = REPL_FLAT[ridx[sel] + k]
 
 
 def clean_flat(toks: np.ndarray, offsets: np.ndarray,
@@ -217,29 +231,13 @@ def clean_flat(toks: np.ndarray, offsets: np.ndarray,
                emit_events: bool = False) -> KernelResult:
     """Run detection/cleaning over a flattened token batch.
 
-    ``toks``: int array of concatenated per-row codepoints.
+    ``toks``: int array of concatenated per-row codepoints (int32 stays
+    int32 end to end; other dtypes are widened to int64).
     ``offsets``: int array, length R+1, row i = toks[offsets[i]:offsets[i+1]].
-
-    Delegates to :mod:`.kernel_core` (memory-lean implementation; sparse
-    line attribution, int32 temporaries).  The dense reference
-    implementation below is kept as ``clean_flat_dense`` for differential
-    testing of the core itself.
     """
-    from . import kernel_core
-
-    consts = (CLASS_LUT, REPL_LEN_LUT, REPL_IDX_LUT, REPL_FLAT,
-              EMOJI_BASE_ARR, TYPE_HIDDEN, TYPE_IVS, TYPE_TYPOGRAPHIC,
-              ACT_DETECTED, ACT_REMOVED, ACT_REPLACED, ACT_BOM,
-              _UNICODE_MAX, KernelResult)
-    return kernel_core.run(toks, offsets, cfg, emit_events, consts)
-
-
-def clean_flat_dense(toks: np.ndarray, offsets: np.ndarray,
-                     cfg: DetectorConfig = FULL_CLEAN,
-                     emit_events: bool = False) -> KernelResult:
-    """Original dense implementation (cross-checked against the sparse
-    core in tests)."""
-    toks = np.asarray(toks, dtype=np.int64)
+    toks = np.asarray(toks)
+    if toks.dtype not in (np.int32, np.int64):
+        toks = toks.astype(np.int64)
     offsets = np.asarray(offsets, dtype=np.int64)
     n = int(toks.shape[0])
     nrows = int(offsets.shape[0]) - 1
@@ -254,117 +252,172 @@ def clean_flat_dense(toks: np.ndarray, offsets: np.ndarray,
             ev_line_no=z[:0], ev_idx=z[:0], ev_token=z[:0],
             ev_type=np.zeros(0, np.int8), ev_action=np.zeros(0, np.int8))
 
-    row_start, line_start, idx_in_line, line_no = _line_structure(
-        toks, offsets, lengths, n)
-
-    safe = np.where((toks >= 0) & (toks < _UNICODE_MAX), toks, 0)
+    # classification gather; guard the LUT index only if out-of-range values
+    # actually occur (rare) to avoid an n-sized copy on the hot path
+    if int(toks.min()) < 0 or int(toks.max()) >= _UNICODE_MAX:
+        safe = np.clip(toks, 0, _UNICODE_MAX - 1)
+        safe[(toks < 0) | (toks >= _UNICODE_MAX)] = 0
+    else:
+        safe = toks
     cls = CLASS_LUT[safe]
 
     ex_arr = cfg.excluded_array()
-    not_excluded = (~np.isin(toks, ex_arr)) if ex_arr.size else \
-        np.ones(n, dtype=bool)
+    not_excluded = ~np.isin(toks, ex_arr) if ex_arr.size else None
 
-    # VS16 emoji-context keep rule (ref :664-671): only when the emoji
-    # library is importable; requires idx>0 *within the line*.
-    fe0f_keep = np.zeros(n, dtype=bool)
+    row_starts = offsets[:-1]  # length nrows (may point past end for empty)
+
+    hidden = cls == TYPE_HIDDEN
+    if not_excluded is not None:
+        hidden &= not_excluded
+
+    # VS16 emoji-context keep rule (ref :664-671): inert when the emoji
+    # library is absent.  idx>0 within the line == previous token exists in
+    # the same line (not a row start, previous token not a newline).
     if EMOJI_BASE_ARR.size:
-        cand = (toks == markers.VS16) & (idx_in_line > 0) & not_excluded
-        pos = np.nonzero(cand)[0]
-        fe0f_keep[pos] = np.isin(toks[pos - 1], EMOJI_BASE_ARR)
+        cand = np.nonzero((toks == markers.VS16) & hidden)[0]
+        if cand.size:
+            at_start = np.isin(cand, row_starts[lengths > 0])
+            prev_ok = np.zeros(cand.size, dtype=bool)
+            nz = ~at_start
+            prev_ok[nz] = (toks[cand[nz] - 1] != markers.NEWLINE) & \
+                np.isin(toks[cand[nz] - 1], EMOJI_BASE_ARR)
+            hidden[cand[prev_ok]] = False
 
-    hidden = (cls == TYPE_HIDDEN) & not_excluded & ~fe0f_keep
-    # BOM = U+FEFF at line 1, index 0 == global row start (ref :675)
-    is_bom = hidden & (toks == markers.BOM) & (np.arange(n) == row_start)
-    ivs = (cls == TYPE_IVS) & not_excluded if cfg.check_ivs else \
-        np.zeros(n, dtype=bool)
-    typo = (cls == TYPE_TYPOGRAPHIC) & not_excluded if cfg.check_typographic \
-        else np.zeros(n, dtype=bool)
+    # BOM = U+FEFF at row start (line 1, idx 0; ref :675)
+    bom_pos = row_starts[(lengths > 0)]
+    bom_pos = bom_pos[(toks[bom_pos] == markers.BOM) & hidden[bom_pos]]
 
-    rlen = REPL_LEN_LUT[safe]
-    typo_replace = typo & (rlen > 0) & cfg.clean
+    ivs = (cls == TYPE_IVS) if cfg.check_ivs else None
+    typo = (cls == TYPE_TYPOGRAPHIC) if cfg.check_typographic else None
+    if not_excluded is not None:
+        if ivs is not None:
+            ivs &= not_excluded
+        if typo is not None:
+            typo &= not_excluded
 
-    if cfg.clean:
-        report = hidden | ivs | typo
-        removed = hidden | ivs
-        # every live replacement differs from its key (asserted in tests),
-        # so `changed` is exactly removal-or-replacement (ref :682,:690,:699)
-        changed = removed | typo_replace
+    rlen = REPL_LEN_LUT[safe] if (typo is not None and cfg.clean) else None
+    typo_replace = (typo & (rlen > 0)) if rlen is not None else None
+
+    # report mask (reuse `hidden`'s buffer pattern: build once)
+    report = hidden.copy()
+    if ivs is not None:
+        report |= ivs
+    if typo is not None:
+        report |= typo
+    if not cfg.clean:
+        report[bom_pos] = False  # lead BOM unreported in detect mode (:677)
+
+    # ---- per-row counts (bincount over event rows only — sparse) ----------
+    rep_pos = np.nonzero(report)[0]
+    rep_row = (np.searchsorted(offsets, rep_pos, side="right") - 1)
+    n_detected = np.bincount(rep_row, minlength=nrows)
+    had_marker = n_detected > 0
+    hpos = rep_pos[hidden[rep_pos]]
+    n_hidden = np.bincount(
+        np.searchsorted(offsets, hpos, side="right") - 1, minlength=nrows)
+    if ivs is not None:
+        ipos = rep_pos[ivs[rep_pos]]
+        n_ivs = np.bincount(
+            np.searchsorted(offsets, ipos, side="right") - 1,
+            minlength=nrows)
     else:
-        report = (hidden & ~is_bom) | ivs | typo  # lead BOM unreported (ref :677)
-        removed = np.zeros(n, dtype=bool)
-        changed = np.zeros(n, dtype=bool)
+        n_ivs = np.zeros(nrows, dtype=np.int64)
+    if typo is not None:
+        tpos = rep_pos[typo[rep_pos]]
+        n_typo = np.bincount(
+            np.searchsorted(offsets, tpos, side="right") - 1,
+            minlength=nrows)
+    else:
+        n_typo = np.zeros(nrows, dtype=np.int64)
+
+    # ---- sparse line attribution for event/report positions ---------------
+    nl_pos = np.nonzero(toks == markers.NEWLINE)[0]
+
+    def line_of(positions, rows):
+        """(line_start, line_no) for sparse positions; all O(k log m)."""
+        rs = offsets[rows]
+        if nl_pos.size == 0:
+            return rs, np.ones(positions.shape[0], dtype=np.int64)
+        p = np.searchsorted(nl_pos, positions)
+        prev_nl1 = np.where(p > 0, nl_pos[np.maximum(p - 1, 0)] + 1, 0)
+        line_start = np.maximum(rs, prev_nl1)
+        p_rs = np.searchsorted(nl_pos, rs)
+        line_no = 1 + (p - p_rs)
+        return line_start, line_no
+
+    # ---- n_processed: the changed-line quirk (ref :750-753) ---------------
+    if cfg.clean:
+        # changed positions = removals (hidden|ivs) + live replacements
+        chg = hidden.copy()
+        if ivs is not None:
+            chg |= ivs
+        if typo_replace is not None:
+            chg |= typo_replace
+        if nl_pos.size == 0:
+            # single-line rows: processed = n_detected on changed rows
+            cpos = np.nonzero(chg)[0]
+            crow = np.searchsorted(offsets, cpos, side="right") - 1
+            row_chg = np.zeros(nrows, dtype=bool)
+            row_chg[crow] = True
+            n_processed = np.where(row_chg, n_detected, 0).astype(np.int64)
+        else:
+            # group report positions by their line_start; a line counts all
+            # its reports iff it has >= 1 changed position
+            ls_rep, _ = line_of(rep_pos, rep_row)
+            cpos = np.nonzero(chg)[0]
+            crow = np.searchsorted(offsets, cpos, side="right") - 1
+            ls_chg, _ = line_of(cpos, crow)
+            changed_lines = np.unique(ls_chg)
+            on_changed = np.isin(ls_rep, changed_lines)
+            n_processed = np.bincount(rep_row[on_changed],
+                                      minlength=nrows).astype(np.int64)
+    else:
+        chg = None
+        n_processed = np.zeros(nrows, dtype=np.int64)
 
     # ---- output rebuild (clean) or passthrough (detect) --------------------
     if cfg.clean:
-        out_len = np.ones(n, dtype=np.int64)
-        out_len[removed] = 0
-        out_len[typo_replace] = rlen[typo_replace]
-        cum = np.concatenate([[0], np.cumsum(out_len)])
+        out_len = np.ones(n, dtype=np.int32)
+        out_len[chg] = 0  # removals + replacements zeroed, then fix repls
+        if typo_replace is not None:
+            out_len[typo_replace] = rlen[typo_replace]
+        cum = np.empty(n + 1, dtype=np.int64)
+        cum[0] = 0
+        np.cumsum(out_len, dtype=np.int64, out=cum[1:])
         out_offsets = cum[offsets]
-        out = np.empty(int(cum[-1]), dtype=np.int64)
-        plain = (out_len == 1) & ~typo_replace
+        out = np.empty(int(cum[-1]), dtype=toks.dtype)
+        plain = out_len == 1
+        if typo_replace is not None:
+            plain &= ~typo_replace
         out[cum[:-1][plain]] = toks[plain]
-        rp = np.nonzero(typo_replace)[0]
-        if rp.size:
-            starts, ridx, rl = cum[rp], REPL_IDX_LUT[toks[rp]], rlen[rp]
-            for k in range(markers.MAX_REPLACEMENT_LEN):
-                sel = rl > k
-                out[starts[sel] + k] = REPL_FLAT[ridx[sel] + k]
+        if typo_replace is not None:
+            rp = np.nonzero(typo_replace)[0]
+            scatter_replacements(out, cum[rp], toks[rp])
     else:
         out, out_offsets = toks, offsets
 
-    # ---- per-row stats -----------------------------------------------------
-    row_of = np.repeat(np.arange(nrows, dtype=np.int64), lengths)
-    n_detected = np.bincount(row_of[report], minlength=nrows)
-    had_marker = n_detected > 0
-    hidden_rep = hidden if cfg.clean else (hidden & ~is_bom)
-    n_hidden_row = np.bincount(row_of[hidden_rep], minlength=nrows)
-    n_ivs_row = np.bincount(row_of[ivs], minlength=nrows)
-    n_typo_row = np.bincount(row_of[typo], minlength=nrows)
-
-    if cfg.clean:
-        # compact per-line ids from the monotone line_start positions
-        new_line = np.concatenate([[True], np.diff(line_start) > 0])
-        lid = np.cumsum(new_line) - 1
-        nlines = int(lid[-1]) + 1
-        line_det = np.bincount(lid[report], minlength=nlines)
-        line_chg = np.bincount(lid[changed], minlength=nlines) > 0
-        line_row = row_of[np.nonzero(new_line)[0]]
-        n_processed = np.bincount(
-            line_row, weights=line_det * line_chg, minlength=nrows
-        ).astype(np.int64)
-    else:
-        n_processed = np.zeros(nrows, dtype=np.int64)
-
     res = KernelResult(out, out_offsets, n_detected.astype(np.int64),
                        n_processed, had_marker,
-                       n_hidden=n_hidden_row.astype(np.int64),
-                       n_ivs=n_ivs_row.astype(np.int64),
-                       n_typo=n_typo_row.astype(np.int64))
+                       n_hidden=n_hidden.astype(np.int64),
+                       n_ivs=n_ivs.astype(np.int64),
+                       n_typo=n_typo.astype(np.int64))
 
     if emit_events:
-        ev = np.nonzero(report)[0]
-        res.ev_offsets = np.searchsorted(ev, offsets, side="left").astype(np.int64)
-        res.ev_line_no = line_no[ev]
-        res.ev_idx = idx_in_line[ev]
-        res.ev_token = toks[ev]
-        ev_type = cls[ev].astype(np.int8)
-        action = np.full(ev.size, ACT_DETECTED, dtype=np.int8)
+        ls_ev, ln_ev = line_of(rep_pos, rep_row)
+        res.ev_offsets = np.searchsorted(rep_pos, offsets,
+                                         side="left").astype(np.int64)
+        res.ev_line_no = ln_ev.astype(np.int64)
+        res.ev_idx = (rep_pos - ls_ev).astype(np.int64)
+        res.ev_token = toks[rep_pos].astype(np.int64)
+        res.ev_type = cls[rep_pos].astype(np.int8)
+        action = np.full(rep_pos.size, ACT_DETECTED, dtype=np.int8)
         if cfg.clean:
-            action[(hidden | ivs)[ev]] = ACT_REMOVED
-            action[is_bom[ev]] = ACT_BOM
-            action[typo_replace[ev]] = ACT_REPLACED
-        res.ev_type = ev_type
+            rem = hidden[rep_pos]
+            if ivs is not None:
+                rem |= ivs[rep_pos]
+            action[rem] = ACT_REMOVED
+            action[np.isin(rep_pos, bom_pos)] = ACT_BOM
+            if typo_replace is not None:
+                action[typo_replace[rep_pos]] = ACT_REPLACED
         res.ev_action = action
     return res
-
-
-def clean_rows(rows: list[list[int]], cfg: DetectorConfig = FULL_CLEAN,
-               emit_events: bool = False) -> KernelResult:
-    """Convenience wrapper for tests: list-of-token-lists in, flat result out."""
-    lengths = np.fromiter((len(r) for r in rows), dtype=np.int64,
-                          count=len(rows))
-    offsets = np.concatenate([[0], np.cumsum(lengths)])
-    toks = np.concatenate([np.asarray(r, dtype=np.int64) for r in rows]) \
-        if len(rows) and offsets[-1] else np.zeros(0, dtype=np.int64)
-    return clean_flat(toks, offsets, cfg, emit_events)

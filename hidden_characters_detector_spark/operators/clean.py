@@ -1,19 +1,25 @@
-"""Spark operators: vectorized clean/detect over ``tokens: array<int>``.
+"""Spark operators: vectorized clean/detect over token or text columns.
 
 The reference's fused scan→classify→transform→aggregate pass
 (``/root/reference/hidden-characters-detector.py:648-779``) becomes a single
-``mapInArrow`` operator: each Arrow RecordBatch's ``tokens`` ListArray is
-processed as one flat numpy array (values + offsets, zero-copy from Arrow),
-so the Python side is pure whole-batch numpy — no per-row Python, per
-BASELINE.json ``input_hint``.
+``mapInArrow`` operator: each Arrow RecordBatch's input column is decoded to
+one flat numpy codepoint array plus row offsets (zero-copy for
+``list<int32>``, one UTF-32 encode for strings), so the Python side is pure
+whole-batch numpy — no per-row Python, per BASELINE.json ``input_hint``.
 
-Two operators:
+Two outputs, each over ``tokens: array<int>`` or a string column:
 
-* :func:`clean_detect` — per-sequence output (FileProcessResult analog,
-  ref :534-542): passthrough cols + ``tokens_clean`` + counters.
-* :func:`detect_events` — detection-event rows (MarkerReport analog,
-  ref :524-532), emitted directly from the kernel masks with Arrow ``take``
-  fan-out; no intermediate nested lists, no ``explode`` shuffle.
+* per sequence (FileProcessResult analog, ref :534-542): passthrough
+  columns + the cleaned sequence + counters — :func:`clean_detect`
+  (tokens) and :func:`clean_documents` (text);
+* per detection event (MarkerReport analog, ref :524-532), emitted
+  directly from the kernel masks with Arrow ``take`` fan-out; no
+  intermediate nested lists, no ``explode`` shuffle —
+  :func:`detect_events` (tokens) and :func:`document_events` (text).
+
+The text operators are the fused form of ``tokenize`` → token operator:
+one Python worker hop and one serialization of the corpus instead of
+three.  All four share one body, :func:`_map_kernel`.
 """
 
 from __future__ import annotations
@@ -27,87 +33,118 @@ from pyspark.sql import DataFrame
 
 from ..functions import kernel
 from ..functions.kernel import DetectorConfig, FULL_CLEAN
+from ..sources.synth import (flat_tokens_to_lists, flat_tokens_to_strings,
+                             lists_to_flat_tokens, strings_to_flat_tokens)
 
-_TOKEN_T = pa.int32()
-
-
-def _flat_tokens(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """ListArray -> (flat values int64, offsets int64), slice- and null-safe.
-
-    NULL token lists count as empty (``flatten()`` already skips null slots,
-    so filling their lengths with 0 keeps offsets aligned with the values).
-    """
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    lengths_arr = col.value_lengths()
-    if lengths_arr.null_count:
-        import pyarrow.compute as pc
-        lengths_arr = pc.fill_null(lengths_arr, 0)
-    lengths = lengths_arr.to_numpy(zero_copy_only=False)
-    offsets = np.concatenate([[0], np.cumsum(lengths, dtype=np.int64)])
-    values = col.flatten().to_numpy(zero_copy_only=False)  # native int32
-    return values, offsets
-
-
-def _list_array(values: np.ndarray, offsets: np.ndarray) -> pa.ListArray:
-    if offsets[-1] >= 2**31:
-        # pa.ListArray requires int32 offsets; Spark's Arrow batches are
-        # bounded by maxRecordsPerBatch well below this — reaching it means
-        # the batch size config is broken, so fail loudly instead of
-        # emitting a large_list that wouldn't match the declared schema.
-        raise ValueError(
-            f"Arrow batch too large for list<int32> offsets "
-            f"({int(offsets[-1])} values); lower "
-            "spark.sql.execution.arrow.maxRecordsPerBatch")
-    return pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int64()).cast(pa.int32()),
-        pa.array(values).cast(_TOKEN_T))
-
-
-CLEAN_OUTPUT_COLS = ("tokens_clean", "n_tok_clean", "n_detected",
-                     "n_processed", "had_marker", "n_hidden", "n_ivs",
-                     "n_typo")
-
-
-def clean_schema(df: DataFrame) -> str:
-    """Output DDL: input columns (tokens replaced by cleaned) + counters."""
-    keep = [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-            if f.name != "tokens"]
-    return ", ".join(keep + [
-        "tokens_clean array<int>", "n_tok_clean int", "n_detected int",
-        "n_processed int", "had_marker boolean", "n_hidden int",
-        "n_ivs int", "n_typo int"])
-
-
-def clean_detect(df: DataFrame, cfg: DetectorConfig = FULL_CLEAN) -> DataFrame:
-    """Clean + per-sequence stats; Arrow-batched, passthrough other columns."""
-    passthrough = [f.name for f in df.schema.fields if f.name != "tokens"]
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            toks, offsets = _flat_tokens(batch.column("tokens"))
-            res = kernel.clean_flat(toks, offsets, cfg)
-            arrays = [batch.column(c) for c in passthrough]
-            arrays += [
-                _list_array(res.out_tokens, res.out_offsets),
-                pa.array(np.diff(res.out_offsets), type=pa.int32()),
-                pa.array(res.n_detected, type=pa.int32()),
-                pa.array(res.n_processed, type=pa.int32()),
-                pa.array(res.had_marker, type=pa.bool_()),
-                pa.array(res.n_hidden, type=pa.int32()),
-                pa.array(res.n_ivs, type=pa.int32()),
-                pa.array(res.n_typo, type=pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=passthrough + list(CLEAN_OUTPUT_COLS))
-
-    return df.mapInArrow(run, clean_schema(df))
-
-
+COUNTER_COL_TYPES = (("n_tok_clean", "int"), ("n_detected", "int"),
+                     ("n_processed", "int"), ("had_marker", "boolean"),
+                     ("n_hidden", "int"), ("n_ivs", "int"),
+                     ("n_typo", "int"))
 EVENT_COL_TYPES = (("line_no", "int"), ("idx", "int"), ("token", "int"),
                    ("marker_type", "string"), ("description", "string"),
                    ("action", "string"), ("replacement", "array<int>"))
-EVENT_SCHEMA_SUFFIX = ", ".join(f"{n} {t}" for n, t in EVENT_COL_TYPES)
+_COUNTERS = [n for n, _ in COUNTER_COL_TYPES]
+_COL_TYPES = dict(COUNTER_COL_TYPES + EVENT_COL_TYPES + (
+    ("tokens_clean", "array<int>"), ("text_clean", "string"),
+    ("n_tok", "int")))
+
+# event code -> name lookups, applied with vectorized Arrow `take`
+_TYPE_NAMES = pa.array([None] + [kernel.TYPE_NAMES[i] for i in (1, 2, 3)],
+                       type=pa.string())
+_ACTION_NAMES = pa.array(
+    [None] + [kernel.ACTION_NAMES[i] for i in (1, 2, 3, 4, 5)],
+    type=pa.string())
+_DESCRIPTIONS = pa.array(kernel.DESC_STRINGS, type=pa.string())
+
+
+def _decode(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Text or token-list column -> (flat codepoints, row offsets)."""
+    if pa.types.is_string(col.type) or pa.types.is_large_string(col.type):
+        return strings_to_flat_tokens(col)
+    return lists_to_flat_tokens(col)
+
+
+def _int32(values: np.ndarray) -> pa.Array:
+    return pa.array(values, type=pa.int32())
+
+
+def _row_arrays(offsets: np.ndarray, res: kernel.KernelResult) -> dict:
+    """Per-sequence output column builders, by column name."""
+    return {
+        "tokens_clean": lambda: flat_tokens_to_lists(res.out_tokens,
+                                                     res.out_offsets),
+        "text_clean": lambda: flat_tokens_to_strings(res.out_tokens,
+                                                     res.out_offsets),
+        "n_tok": lambda: _int32(np.diff(offsets)),
+        "n_tok_clean": lambda: _int32(np.diff(res.out_offsets)),
+        "n_detected": lambda: _int32(res.n_detected),
+        "n_processed": lambda: _int32(res.n_processed),
+        "had_marker": lambda: pa.array(res.had_marker, type=pa.bool_()),
+        "n_hidden": lambda: _int32(res.n_hidden),
+        "n_ivs": lambda: _int32(res.n_ivs),
+        "n_typo": lambda: _int32(res.n_typo),
+    }
+
+
+def _replacements(res: kernel.KernelResult) -> pa.ListArray:
+    """replacement col: [] for removals/BOM, codepoints for Replaced,
+    null for detect-only (mirrors ref :532 Optional)."""
+    replaced = res.ev_action == kernel.ACT_REPLACED
+    lens = np.where(replaced, kernel.REPL_LEN_LUT[res.ev_token], 0)
+    offsets = np.concatenate([[0], np.cumsum(lens, dtype=np.int64)])
+    flat = np.empty(int(offsets[-1]), dtype=np.int64)
+    rp = np.nonzero(replaced)[0]
+    kernel.scatter_replacements(flat, offsets[rp], res.ev_token[rp])
+    return flat_tokens_to_lists(flat, offsets,
+                                mask=res.ev_action == kernel.ACT_DETECTED)
+
+
+def _event_arrays(offsets: np.ndarray, res: kernel.KernelResult) -> dict:
+    """Per-event output column builders, by column name."""
+    return {
+        "line_no": lambda: _int32(res.ev_line_no),
+        "idx": lambda: _int32(res.ev_idx),
+        "token": lambda: _int32(res.ev_token),
+        "marker_type": lambda: _TYPE_NAMES.take(
+            pa.array(res.ev_type.astype(np.int64))),
+        "description": lambda: _DESCRIPTIONS.take(pa.array(
+            kernel.DESC_IDX_LUT[res.ev_token].astype(np.int64))),
+        "action": lambda: _ACTION_NAMES.take(
+            pa.array(res.ev_action.astype(np.int64))),
+        "replacement": lambda: _replacements(res),
+    }
+
+
+def _ddl(df: DataFrame, passthrough: list[str], out_cols: list[str]) -> str:
+    return ", ".join(
+        [f"{n} {df.schema[n].dataType.simpleString()}" for n in passthrough]
+        + [f"{n} {_COL_TYPES[n]}" for n in out_cols])
+
+
+def _map_kernel(df: DataFrame, in_col: str, cfg: DetectorConfig,
+                passthrough: list[str], out_cols: list[str], *,
+                events: bool = False) -> DataFrame:
+    """The one body of all four operators: decode ``in_col``, run the
+    kernel, emit the passthrough columns (fanned out per event when
+    ``events``) followed by ``out_cols``."""
+    build = _event_arrays if events else _row_arrays
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            toks, offsets = _decode(batch.column(in_col))
+            res = kernel.clean_flat(toks, offsets, cfg, emit_events=events)
+            kept = [batch.column(c) for c in passthrough]
+            if events:
+                counts = np.diff(res.ev_offsets)
+                take = pa.array(np.repeat(np.arange(len(counts)), counts),
+                                type=pa.int64())
+                kept = [c.take(take) for c in kept]
+            cols = build(offsets, res)
+            yield pa.RecordBatch.from_arrays(
+                kept + [cols[n]() for n in out_cols],
+                names=passthrough + out_cols)
+
+    return df.mapInArrow(run, _ddl(df, passthrough, out_cols))
 
 
 def _event_cols(event_cols: list[str] | None) -> list[str]:
@@ -120,13 +157,32 @@ def _event_cols(event_cols: list[str] | None) -> list[str]:
     return [n for n in names if n in event_cols]
 
 
+def _token_passthrough(df: DataFrame, keep: list[str] | None) -> list[str]:
+    return [f.name for f in df.schema.fields
+            if f.name != "tokens" and (keep is None or f.name in keep)]
+
+
+def _text_passthrough(df: DataFrame, text_col: str,
+                      keep: list[str] | None) -> list[str]:
+    return [f.name for f in df.schema.fields
+            if (f.name != text_col if keep is None else f.name in keep)]
+
+
+def clean_schema(df: DataFrame) -> str:
+    """Output DDL: input columns (tokens replaced by cleaned) + counters."""
+    return _ddl(df, _token_passthrough(df, None),
+                ["tokens_clean"] + _COUNTERS)
+
+
+def clean_detect(df: DataFrame, cfg: DetectorConfig = FULL_CLEAN) -> DataFrame:
+    """Clean + per-sequence stats; Arrow-batched, passthrough other columns."""
+    return _map_kernel(df, "tokens", cfg, _token_passthrough(df, None),
+                       ["tokens_clean"] + _COUNTERS)
+
+
 def event_schema(df: DataFrame, keep: list[str] | None = None,
                  event_cols: list[str] | None = None) -> str:
-    cols = [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-            if f.name != "tokens" and (keep is None or f.name in keep)]
-    want = set(_event_cols(event_cols))
-    return ", ".join(cols + [f"{n} {t}" for n, t in EVENT_COL_TYPES
-                             if n in want])
+    return _ddl(df, _token_passthrough(df, keep), _event_cols(event_cols))
 
 
 def detect_events(df: DataFrame, cfg: DetectorConfig = FULL_CLEAN, *,
@@ -141,64 +197,8 @@ def detect_events(df: DataFrame, cfg: DetectorConfig = FULL_CLEAN, *,
     Replacement column carries the applied replacement codepoints (empty for
     removals, null when no replacement applied — mirrors ref :532 Optional).
     """
-    passthrough = [f.name for f in df.schema.fields
-                   if f.name != "tokens" and (keep is None or f.name in keep)]
-    ev_names = _event_cols(event_cols)
-    # code -> name lookup arrays, applied with vectorized Arrow `take`
-    type_lut = pa.array([None] + [kernel.TYPE_NAMES[i] for i in (1, 2, 3)],
-                        type=pa.string())
-    act_lut = pa.array(
-        [None] + [kernel.ACTION_NAMES[i] for i in (1, 2, 3, 4, 5)],
-        type=pa.string())
-    desc_lut = pa.array(kernel.DESC_STRINGS, type=pa.string())
-    from .. import markers as mk
-
-    def _replacements(res) -> pa.ListArray:
-        """replacement col: [] for removals/BOM, codepoints for Replaced,
-        null for detect-only (mirrors ref :532 Optional)."""
-        acts, toks = res.ev_action, res.ev_token
-        replaced = acts == kernel.ACT_REPLACED
-        lens = np.where(replaced, kernel.REPL_LEN_LUT[toks], 0).astype(np.int64)
-        cum = np.concatenate([[0], np.cumsum(lens)])
-        flat = np.empty(int(cum[-1]), dtype=np.int64)
-        rp = np.nonzero(replaced)[0]
-        if rp.size:
-            starts = cum[rp]
-            ridx, rl = kernel.REPL_IDX_LUT[toks[rp]], lens[rp]
-            for k in range(mk.MAX_REPLACEMENT_LEN):
-                sel = rl > k
-                flat[starts[sel] + k] = kernel.REPL_FLAT[ridx[sel] + k]
-        is_null = acts == kernel.ACT_DETECTED
-        return pa.ListArray.from_arrays(
-            pa.array(cum, type=pa.int64()).cast(pa.int32()),
-            pa.array(flat, type=pa.int64()).cast(_TOKEN_T),
-            mask=pa.array(is_null))
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            toks, offsets = _flat_tokens(batch.column("tokens"))
-            res = kernel.clean_flat(toks, offsets, cfg, emit_events=True)
-            counts = np.diff(res.ev_offsets)
-            row_idx = np.repeat(np.arange(len(counts)), counts)
-            take = pa.array(row_idx, type=pa.int64())
-            arrays = [batch.column(c).take(take) for c in passthrough]
-            builders = {
-                "line_no": lambda: pa.array(res.ev_line_no, type=pa.int32()),
-                "idx": lambda: pa.array(res.ev_idx, type=pa.int32()),
-                "token": lambda: pa.array(res.ev_token, type=pa.int32()),
-                "marker_type": lambda: type_lut.take(
-                    pa.array(res.ev_type.astype(np.int64))),
-                "description": lambda: desc_lut.take(pa.array(
-                    kernel.DESC_IDX_LUT[res.ev_token].astype(np.int64))),
-                "action": lambda: act_lut.take(
-                    pa.array(res.ev_action.astype(np.int64))),
-                "replacement": lambda: _replacements(res),
-            }
-            arrays += [builders[n]() for n in ev_names]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=passthrough + ev_names)
-
-    return df.mapInArrow(run, event_schema(df, keep, event_cols))
+    return _map_kernel(df, "tokens", cfg, _token_passthrough(df, keep),
+                       _event_cols(event_cols), events=True)
 
 
 def clean_documents(df: DataFrame, text_col: str = "text",
@@ -206,49 +206,12 @@ def clean_documents(df: DataFrame, text_col: str = "text",
                     keep: list[str] | None = None,
                     emit_text: bool = True) -> DataFrame:
     """FUSED text-corpus cleaner: string -> tokens -> kernel -> cleaned
-    string/stats in ONE Arrow pass (one Python worker hop instead of the
-    tokenize → clean_detect → detokenize chain — one serialization of the
-    corpus instead of three).
-    """
-    from ..sources.synth import flat_tokens_to_strings, strings_to_flat_tokens
-
-    keep = [f.name for f in df.schema.fields if f.name != text_col] \
-        if keep is None else keep
-    kept_ddl = [f"{f.name} {f.dataType.simpleString()}"
-                for f in df.schema.fields if f.name in keep]
-    out_cols = (["text_clean string"] if emit_text
-                else ["tokens_clean array<int>"])
-    ddl = ", ".join(kept_ddl + out_cols + [
-        "n_tok int", "n_tok_clean int", "n_detected int",
-        "n_processed int", "had_marker boolean", "n_hidden int",
-        "n_ivs int", "n_typo int"])
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            flat, offsets = strings_to_flat_tokens(batch.column(text_col))
-            res = kernel.clean_flat(flat, offsets, cfg)
-            if emit_text:
-                payload = [flat_tokens_to_strings(res.out_tokens,
-                                                  res.out_offsets)]
-            else:
-                payload = [_list_array(res.out_tokens, res.out_offsets)]
-            arrays = [batch.column(c) for c in keep] + payload + [
-                pa.array(np.diff(offsets), type=pa.int32()),
-                pa.array(np.diff(res.out_offsets), type=pa.int32()),
-                pa.array(res.n_detected, type=pa.int32()),
-                pa.array(res.n_processed, type=pa.int32()),
-                pa.array(res.had_marker, type=pa.bool_()),
-                pa.array(res.n_hidden, type=pa.int32()),
-                pa.array(res.n_ivs, type=pa.int32()),
-                pa.array(res.n_typo, type=pa.int32()),
-            ]
-            names = keep + (["text_clean"] if emit_text
-                            else ["tokens_clean"]) + [
-                "n_tok", "n_tok_clean", "n_detected", "n_processed",
-                "had_marker", "n_hidden", "n_ivs", "n_typo"]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return df.mapInArrow(run, ddl)
+    string (``emit_text``) or token list, plus ``n_tok`` and the counters,
+    in ONE Arrow pass."""
+    payload = ["text_clean" if emit_text else "tokens_clean", "n_tok"]
+    return _map_kernel(df, text_col, cfg,
+                       _text_passthrough(df, text_col, keep),
+                       payload + _COUNTERS)
 
 
 def document_events(df: DataFrame, text_col: str = "text",
@@ -257,64 +220,6 @@ def document_events(df: DataFrame, text_col: str = "text",
                     event_cols: list[str] | None = None) -> DataFrame:
     """FUSED text-corpus event emitter: string -> tokens -> events in one
     Arrow pass (vs tokenize → detect_events)."""
-    from ..sources.synth import strings_to_flat_tokens
-
-    keep = [f.name for f in df.schema.fields if f.name != text_col] \
-        if keep is None else keep
-    ev_names = _event_cols(event_cols)
-    want = set(ev_names)
-    kept_ddl = [f"{f.name} {f.dataType.simpleString()}"
-                for f in df.schema.fields if f.name in keep]
-    ddl = ", ".join(kept_ddl + [f"{n} {t}" for n, t in EVENT_COL_TYPES
-                                if n in want])
-    type_lut = pa.array([None] + [kernel.TYPE_NAMES[i] for i in (1, 2, 3)],
-                        type=pa.string())
-    act_lut = pa.array(
-        [None] + [kernel.ACTION_NAMES[i] for i in (1, 2, 3, 4, 5)],
-        type=pa.string())
-    desc_lut = pa.array(kernel.DESC_STRINGS, type=pa.string())
-    from .. import markers as mk
-
-    def _repls(res) -> pa.ListArray:
-        acts, toks = res.ev_action, res.ev_token
-        replaced = acts == kernel.ACT_REPLACED
-        lens = np.where(replaced, kernel.REPL_LEN_LUT[toks], 0).astype(
-            np.int64)
-        cum = np.concatenate([[0], np.cumsum(lens)])
-        flat = np.empty(int(cum[-1]), dtype=np.int64)
-        rp = np.nonzero(replaced)[0]
-        if rp.size:
-            starts, ridx = cum[rp], kernel.REPL_IDX_LUT[toks[rp]]
-            rl = lens[rp]
-            for k in range(mk.MAX_REPLACEMENT_LEN):
-                sel = rl > k
-                flat[starts[sel] + k] = kernel.REPL_FLAT[ridx[sel] + k]
-        return pa.ListArray.from_arrays(
-            pa.array(cum, type=pa.int64()).cast(pa.int32()),
-            pa.array(flat, type=pa.int64()).cast(_TOKEN_T),
-            mask=pa.array(acts == kernel.ACT_DETECTED))
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            flat, offsets = strings_to_flat_tokens(batch.column(text_col))
-            res = kernel.clean_flat(flat, offsets, cfg, emit_events=True)
-            counts = np.diff(res.ev_offsets)
-            take = pa.array(np.repeat(np.arange(len(counts)), counts),
-                            type=pa.int64())
-            builders = {
-                "line_no": lambda: pa.array(res.ev_line_no, type=pa.int32()),
-                "idx": lambda: pa.array(res.ev_idx, type=pa.int32()),
-                "token": lambda: pa.array(res.ev_token, type=pa.int32()),
-                "marker_type": lambda: type_lut.take(
-                    pa.array(res.ev_type.astype(np.int64))),
-                "description": lambda: desc_lut.take(pa.array(
-                    kernel.DESC_IDX_LUT[res.ev_token].astype(np.int64))),
-                "action": lambda: act_lut.take(
-                    pa.array(res.ev_action.astype(np.int64))),
-                "replacement": lambda: _repls(res),
-            }
-            arrays = [batch.column(c).take(take) for c in keep] \
-                + [builders[n]() for n in ev_names]
-            yield pa.RecordBatch.from_arrays(arrays, names=keep + ev_names)
-
-    return df.mapInArrow(run, ddl)
+    return _map_kernel(df, text_col, cfg,
+                       _text_passthrough(df, text_col, keep),
+                       _event_cols(event_cols), events=True)

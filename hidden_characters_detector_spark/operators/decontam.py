@@ -36,16 +36,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .clean import _flat_tokens
+from ..sources.synth import lists_to_flat_tokens
 from .dedup import _flat_shingle_hashes, _rolling_hashes, _unique_per_doc
-
-
-def _list_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """pa list<int> column -> (flat uint64 values, int64 row offsets);
-    NULL rows behave as empty (no shingles, no signal).  Thin cast over
-    the shared slice-/null-safe flattener (``clean._flat_tokens``)."""
-    values, offsets = _flat_tokens(col)
-    return values.astype(np.uint64), offsets
 
 
 def _shingle_rows(df: DataFrame, col: str, id_col: str, extract
@@ -93,8 +85,9 @@ def token_shingle_hashes(df: DataFrame, tokens_col: str = "tokens",
     arrays are codepoints (input_hint), so the hashes are identical to the
     text path's for equal content — a corpus ingested as text and an eval
     set stored pre-tokenized decontaminate against each other exactly."""
-    return _shingle_rows(df, tokens_col, id_col,
-                         lambda c: _rolling_hashes(*_list_flat(c), k))
+    return _shingle_rows(
+        df, tokens_col, id_col,
+        lambda c: _rolling_hashes(*lists_to_flat_tokens(c), k))
 
 
 def build_eval_filter(spark, eval_df: DataFrame, *,
@@ -134,8 +127,8 @@ def mark_contaminated(df: DataFrame, eval_hashes, *,
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ev = eval_hashes.value
         for batch in batches:
-            flat, off = _list_flat(batch.column(tokens_col))
-            h, hoff = _rolling_hashes(flat, off, k)
+            h, hoff = _rolling_hashes(
+                *lists_to_flat_tokens(batch.column(tokens_col)), k)
             hits = np.zeros(h.shape[0], dtype=bool)
             if h.size and ev.size:
                 idx = np.searchsorted(ev, h.astype(np.int64))

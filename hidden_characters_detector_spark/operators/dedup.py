@@ -76,17 +76,16 @@ def _flat_shingle_hashes(texts: pa.Array, k: int
     computed over the whole batch's concatenated codepoints; window starts
     that would cross a document boundary are simply not gathered.
     """
-    flat, offsets = strings_to_flat_tokens(texts)
-    return _rolling_hashes(flat.astype(np.uint64), offsets, k)
+    return _rolling_hashes(*strings_to_flat_tokens(texts), k)
 
 
 def _rolling_hashes(cps: np.ndarray, offsets: np.ndarray, k: int
                     ) -> tuple[np.ndarray, np.ndarray]:
-    """Core of :func:`_flat_shingle_hashes` over an already-flat uint64
-    value array + row offsets — shared by the text path (codepoints from
-    strings) and the token-table path (the ``tokens`` arrays ARE the
-    codepoints, so both paths produce identical hashes for equal
-    content)."""
+    """Core of :func:`_flat_shingle_hashes` over an already-flat codepoint
+    array (any integer dtype, hashed as uint64) + row offsets — shared by
+    the text path (codepoints from strings) and the token-table path (the
+    ``tokens`` arrays ARE the codepoints, so both paths produce identical
+    hashes for equal content)."""
     n = cps.size
     lens = np.diff(offsets)
     out_lens = np.maximum(lens - k + 1, 0)
@@ -94,7 +93,7 @@ def _rolling_hashes(cps: np.ndarray, offsets: np.ndarray, k: int
     total = int(out_offsets[-1])
     if total == 0:
         return np.zeros(0, dtype=np.uint64), out_offsets
-    acc = _horner_windows(cps, k)
+    acc = _horner_windows(cps.astype(np.uint64, copy=False), k)
     # gather only in-document window starts
     pos_in_doc = np.arange(total, dtype=np.int64) - np.repeat(
         out_offsets[:-1], out_lens)

@@ -96,8 +96,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..sources.synth import flat_tokens_to_strings, strings_to_flat_tokens
-from .clean import _flat_tokens
+from ..sources.synth import (flat_tokens_to_strings, lists_to_flat_tokens,
+                             strings_to_flat_tokens)
 from .dedup import _rolling_hashes
 
 
@@ -203,7 +203,7 @@ def position_hashes(df: DataFrame, text_col: str = "text",
     (see :func:`_position_rows`)."""
     return _position_rows(
         df, text_col, id_col,
-        lambda c: _rolling_hashes(*_text_flat(c), k), winnow)
+        lambda c: _rolling_hashes(*strings_to_flat_tokens(c), k), winnow)
 
 
 def token_position_hashes(df: DataFrame, tokens_col: str = "tokens",
@@ -215,17 +215,7 @@ def token_position_hashes(df: DataFrame, tokens_col: str = "tokens",
     (parity-tested)."""
     return _position_rows(
         df, tokens_col, id_col,
-        lambda c: _rolling_hashes(*_list_flat_u64(c), k), winnow)
-
-
-def _text_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    flat, off = strings_to_flat_tokens(col)
-    return flat.astype(np.uint64), off
-
-
-def _list_flat_u64(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    values, off = _flat_tokens(col)
-    return values.astype(np.uint64), off
+        lambda c: _rolling_hashes(*lists_to_flat_tokens(c), k), winnow)
 
 
 def _merge_spans(marked: DataFrame, id_col: str, k: int) -> DataFrame:

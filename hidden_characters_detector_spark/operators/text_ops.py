@@ -16,7 +16,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-from ..sources.synth import flat_tokens_to_strings, strings_to_flat_tokens
+from ..sources.synth import (flat_tokens_to_lists, flat_tokens_to_strings,
+                             lists_to_flat_tokens, strings_to_flat_tokens)
 
 
 def tokenize(df: DataFrame, text_col: str = "text",
@@ -30,11 +31,9 @@ def tokenize(df: DataFrame, text_col: str = "text",
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             flat, offsets = strings_to_flat_tokens(batch.column(text_col))
-            toks = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int64()).cast(pa.int32()),
-                pa.array(flat, type=pa.int64()).cast(pa.int32()))
             arrays = [batch.column(c) for c in keep] + [
-                toks, pa.array(np.diff(offsets), type=pa.int32())]
+                flat_tokens_to_lists(flat, offsets),
+                pa.array(np.diff(offsets), type=pa.int32())]
             yield pa.RecordBatch.from_arrays(
                 arrays, names=keep + [out_col, "n_tok"])
 
@@ -44,7 +43,7 @@ def tokenize(df: DataFrame, text_col: str = "text",
 def detokenize(df: DataFrame, list_col: str = "tokens_clean",
                out_col: str = "text_clean") -> DataFrame:
     """Add ``out_col: string`` built from codepoint list ``list_col``
-    (dropped from the output)."""
+    (dropped from the output); a NULL list becomes the empty string."""
     keep = [f.name for f in df.schema.fields if f.name != list_col]
     ddl = ", ".join(
         [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
@@ -52,12 +51,7 @@ def detokenize(df: DataFrame, list_col: str = "tokens_clean",
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            col = batch.column(list_col)
-            lengths = col.value_lengths().to_numpy(zero_copy_only=False)
-            offsets = np.concatenate([[0], np.cumsum(lengths,
-                                                     dtype=np.int64)])
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False)
+            flat, offsets = lists_to_flat_tokens(batch.column(list_col))
             texts = flat_tokens_to_strings(flat, offsets)
             arrays = [batch.column(c) for c in keep] + [texts]
             yield pa.RecordBatch.from_arrays(arrays, names=keep + [out_col])

@@ -86,6 +86,42 @@ def flat_tokens_to_strings(flat: np.ndarray, offsets: np.ndarray) -> pa.Array:
                      for i in range(len(offsets) - 1)], type=pa.string())
 
 
+def lists_to_flat_tokens(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Arrow ``list<int32>`` array -> (flat values, offsets int64).
+
+    Slice- and NULL-safe: NULL lists count as empty (``flatten()`` skips
+    null slots, so filling their lengths with 0 keeps offsets aligned with
+    the values).  The values are the native int32 buffer, not a copy.
+    """
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    lengths = col.value_lengths()
+    if lengths.null_count:
+        lengths = pc.fill_null(lengths, 0)
+    offsets = np.concatenate([[0], np.cumsum(
+        lengths.to_numpy(zero_copy_only=False), dtype=np.int64)])
+    return col.flatten().to_numpy(zero_copy_only=False), offsets
+
+
+def flat_tokens_to_lists(values: np.ndarray, offsets: np.ndarray,
+                         mask: np.ndarray | None = None) -> pa.ListArray:
+    """(flat values, offsets) -> Arrow ``list<int32>`` array; rows where
+    ``mask`` is True are NULL."""
+    if offsets[-1] >= 2**31:
+        # list<int32> needs int32 offsets; Spark's Arrow batches are bounded
+        # by maxRecordsPerBatch well below this, so reaching it means the
+        # batch size config is broken: fail loudly instead of emitting a
+        # large_list that would not match the declared schema.
+        raise ValueError(
+            f"Arrow batch too large for list<int32> offsets "
+            f"({int(offsets[-1])} values); lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch")
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, type=pa.int64()).cast(pa.int32()),
+        pa.array(values).cast(pa.int32()),
+        mask=None if mask is None else pa.array(mask))
+
+
 def inject_flat(flat: np.ndarray, offsets: np.ndarray, doc_seed: np.ndarray,
                 rate: float = 0.04, seed: int = 42
                 ) -> tuple[np.ndarray, np.ndarray]:
@@ -173,11 +209,8 @@ def token_table(spark: SparkSession, sf_dir: str, inject: bool = True,
             doc_id_str = pc.binary_join_element_wise(
                 "doc", pc.cast(batch.column("doc_id"), pa.string()),
                 "")
-            tok_arr = pa.ListArray.from_arrays(
-                pa.array(offsets, type=pa.int64()).cast(pa.int32()),
-                pa.array(flat, type=pa.int64()).cast(pa.int32()))
             yield pa.RecordBatch.from_arrays(
-                [doc_id_str, tok_arr,
+                [doc_id_str, flat_tokens_to_lists(flat, offsets),
                  pa.array(np.diff(offsets), type=pa.int32()), src,
                  pa.array(ev, type=pa.timestamp("us"))],
                 names=["doc_id", "tokens", "n_tok", "source", "event_time"])
@@ -218,9 +251,7 @@ def rate_token_stream(spark: SparkSession, *, rows_per_second: int = 100,
             yield pa.RecordBatch.from_arrays(
                 [pa.array([f"rate{v}" for v in vals.tolist()],
                           type=pa.string()),
-                 pa.ListArray.from_arrays(
-                     pa.array(offsets, type=pa.int64()).cast(pa.int32()),
-                     pa.array(flat, type=pa.int64()).cast(pa.int32())),
+                 flat_tokens_to_lists(flat, offsets),
                  pa.array(np.diff(offsets), type=pa.int32()),
                  pa.array(np.asarray(SOURCES, dtype=object)[src_idx],
                           type=pa.string()),

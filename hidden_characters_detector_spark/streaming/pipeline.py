@@ -379,7 +379,7 @@ def single_pass_pipeline(spark: SparkSession, input_path: str, out_dir: str,
         tok = gated.where(~F.col("__in_history")).drop("__in_history")
     reason = F.col(QUARANTINE_REASON_COL)
     # bad rows flow through the kernel untouched: the Arrow kernel treats a
-    # NULL token list as empty (operators.clean._flat_tokens), so no
+    # NULL token list as empty (sources.synth.lists_to_flat_tokens), so no
     # per-row array rewrite is needed — the reason column is the only
     # added projection, and the good-write filter drops bad rows after the
     # (for them ~free) kernel pass

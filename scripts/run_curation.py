@@ -72,9 +72,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
-os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(256 << 20))
-os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
+from hidden_characters_detector_spark.functions.kernel import (  # noqa: E402
+    pin_allocator_env)
+
+pin_allocator_env()
 
 
 def main() -> None:

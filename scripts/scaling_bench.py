@@ -29,11 +29,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
-os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(256 << 20))
-# pyarrow's own pool (jemalloc/mimalloc) returns memory to the OS via
-# madvise, re-faulting pages each batch on this VM; use glibc instead
-os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
+from hidden_characters_detector_spark.functions.kernel import (  # noqa: E402
+    pin_allocator_env)
+
+pin_allocator_env()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # 2.4M sequences: large enough that the ~2.8 s fixed per-job cost (driver

@@ -80,12 +80,13 @@ def oracle(refmod):
 
 @pytest.fixture(scope="session")
 def spark():
-    # sandbox page faults are pathologically slow; keep worker heaps resident
-    # (see bench.py) so repeated Arrow batches don't re-fault every run
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 30))
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(256 << 20))
-    os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
+    # keep worker heaps resident so repeated Arrow batches don't re-fault
+    # their pages every run (slow on lazily-backed VM memory)
+    from hidden_characters_detector_spark.functions.kernel import (
+        pin_allocator_env)
     from pyspark.sql import SparkSession
+
+    pin_allocator_env()
 
     s = (SparkSession.builder.master("local[4]")
          .appName("hcd-spark-tests")

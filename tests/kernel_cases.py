@@ -12,7 +12,9 @@ import random
 
 import numpy as np
 
-from hidden_characters_detector_spark.functions.kernel import DetectorConfig
+from hidden_characters_detector_spark.functions import kernel
+from hidden_characters_detector_spark.functions.kernel import (
+    FULL_CLEAN, DetectorConfig, KernelResult)
 
 # --- the FIXTURES.md pattern matrix ----------------------------------------
 PATTERNS = {
@@ -133,3 +135,9 @@ def flatten(rows: list[list[int]]) -> tuple[np.ndarray, np.ndarray]:
     toks = np.concatenate([np.asarray(r, dtype=np.int64) for r in rows]) \
         if len(rows) and offsets[-1] else np.zeros(0, dtype=np.int64)
     return toks, offsets
+
+
+def clean_rows(rows: list[list[int]], cfg: DetectorConfig = FULL_CLEAN,
+               emit_events: bool = False) -> KernelResult:
+    """``kernel.clean_flat`` over a list of token rows."""
+    return kernel.clean_flat(*flatten(rows), cfg, emit_events)

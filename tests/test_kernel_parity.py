@@ -15,16 +15,17 @@ import pytest
 
 from hidden_characters_detector_spark.functions import kernel
 from hidden_characters_detector_spark.functions.kernel import DetectorConfig
+from dense_kernel import clean_flat_dense
 from kernel_cases import (BASE_POOL, EXCLUDED_TEXT, FLAG_MATRIX,
-                          MARKER_POOL, PATTERNS, WORD_MODE_TEXT, config,
-                          flags_id, random_rows, sweep_text)
+                          MARKER_POOL, PATTERNS, WORD_MODE_TEXT, clean_rows,
+                          config, flags_id, random_rows, sweep_text)
 
 
 def run_both(oracle, text, **flags):
     exp = oracle.run(text, **flags)
     cfg = config(flags)
     toks = [ord(c) for c in text]
-    res = kernel.clean_rows([toks], cfg, emit_events=True)
+    res = clean_rows([toks], cfg, emit_events=True)
     got_tokens = res.out_tokens[
         res.out_offsets[0]:res.out_offsets[1]].tolist()
     return exp, res, got_tokens
@@ -98,7 +99,7 @@ def test_expansion_lengths(oracle):
 def test_multirow_batch(oracle):
     texts = list(PATTERNS.values())
     cfg = DetectorConfig()
-    res = kernel.clean_rows([[ord(c) for c in t] for t in texts], cfg,
+    res = clean_rows([[ord(c) for c in t] for t in texts], cfg,
                             emit_events=True)
     for i, t in enumerate(texts):
         exp = oracle.run(t)
@@ -116,7 +117,7 @@ def test_multirow_batch(oracle):
                          ids=["full", "hidden_only", "no_ivs", "detect"])
 def test_randomized_differential(oracle, seed, flags):
     rows = random_rows(seed)
-    res = kernel.clean_rows(rows, config(flags))
+    res = clean_rows(rows, config(flags))
     for i, toks in enumerate(rows):
         text = "".join(map(chr, toks))
         exp = oracle.run(text, **flags)
@@ -139,14 +140,14 @@ def test_exhaustive_marker_sweep(oracle, flags):
 def test_family_counts_sum_to_detected():
     rows = [[ord(c) for c in t] for t in PATTERNS.values()]
     for cfg in (DetectorConfig(), DetectorConfig(clean=False)):
-        res = kernel.clean_rows(rows, cfg)
+        res = clean_rows(rows, cfg)
         assert (res.n_hidden + res.n_ivs + res.n_typo
                 == res.n_detected).all()
 
 
 @pytest.mark.parametrize("seed", range(4))
 def test_sparse_core_equals_dense(seed):
-    """The memory-lean sparse core == the dense implementation on
+    """The memory-lean sparse kernel == the dense reference on
     newline-heavy random corpora (both event and non-event paths)."""
     rng = random.Random(1000 + seed)
     rows = []
@@ -167,7 +168,7 @@ def test_sparse_core_equals_dense(seed):
                 DetectorConfig(check_ivs=False),
                 DetectorConfig(excluded=frozenset({0x200B}))):
         a = kernel.clean_flat(flat, off, cfg, emit_events=True)
-        b = kernel.clean_flat_dense(flat, off, cfg, emit_events=True)
+        b = clean_flat_dense(flat, off, cfg, emit_events=True)
         assert a.out_tokens.tolist() == b.out_tokens.tolist()
         assert a.out_offsets.tolist() == b.out_offsets.tolist()
         for f in ("n_detected", "n_processed", "had_marker", "n_hidden",

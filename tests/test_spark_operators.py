@@ -183,6 +183,7 @@ def test_vs16_emoji_rule_when_library_present(monkeypatch):
     absent in this sandbox, so the base set is injected."""
     import numpy as np
     from hidden_characters_detector_spark.functions import kernel
+    from kernel_cases import clean_rows
     monkeypatch.setattr(kernel, "EMOJI_BASE_ARR",
                         np.array([0x2764], dtype=np.int64))
     heart, fe0f = 0x2764, 0xFE0F
@@ -192,7 +193,7 @@ def test_vs16_emoji_rule_when_library_present(monkeypatch):
         [ord("a"), 0x0A, fe0f, ord("b")],    # start of line 2 -> removed
         [ord("a"), fe0f],                    # no emoji base before -> removed
     ]
-    res = kernel.clean_rows(rows, kernel.FULL_CLEAN)
+    res = clean_rows(rows, kernel.FULL_CLEAN)
     outs = [res.out_tokens[res.out_offsets[i]:res.out_offsets[i+1]].tolist()
             for i in range(4)]
     assert outs[0] == [ord("h"), heart, fe0f, ord("i")]
@@ -290,3 +291,16 @@ def test_text_operators_match_token_operators(spark, cfg):
     assert fused_ev == events(detect_events(tokenize(docs), cfg))
     assert {t[0] for t in fused_ev} == {"p1", "p2", "p6"}
 
+
+
+def test_detokenize_null_row_keeps_later_rows(spark):
+    """A NULL token list decodes as empty and leaves the later rows of its
+    Arrow batch intact."""
+    from hidden_characters_detector_spark.operators.text_ops import (
+        detokenize)
+
+    df = spark.createDataFrame(
+        [(0, [72, 105]), (1, None), (2, [33]), (3, [])],
+        "i int, tokens_clean array<int>").coalesce(1)
+    got = [r["text_clean"] for r in detokenize(df).orderBy("i").collect()]
+    assert got == ["Hi", "", "!", ""]
