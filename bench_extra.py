@@ -27,10 +27,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from hidden_characters_detector_spark.functions.kernel import (  # noqa: E402
-    pin_allocator_env)
+from hidden_characters_detector_spark.functions import kernel  # noqa: E402
 
-pin_allocator_env()
+kernel.pin_allocator_env()
 os.environ.setdefault("MALLOC_TOP_PAD_", str(128 << 20))
 
 
@@ -80,7 +79,6 @@ def clean_decomposition() -> None:
     import bench
     from pyspark.sql import functions as F
 
-    from hidden_characters_detector_spark.functions import kernel
     from hidden_characters_detector_spark.functions.kernel import FULL_CLEAN
     from hidden_characters_detector_spark.operators.clean import clean_detect
     from hidden_characters_detector_spark.sources.synth import (

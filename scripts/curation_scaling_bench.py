@@ -30,10 +30,9 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from hidden_characters_detector_spark.functions.kernel import (  # noqa: E402
-    pin_allocator_env)
+from hidden_characters_detector_spark.functions import kernel  # noqa: E402
 
-pin_allocator_env()
+kernel.pin_allocator_env()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # 90 replicas = 450k docs: large enough to amortize the fixed per-job cost

@@ -72,10 +72,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hidden_characters_detector_spark.functions.kernel import (  # noqa: E402
-    pin_allocator_env)
+from hidden_characters_detector_spark.functions import kernel  # noqa: E402
 
-pin_allocator_env()
+kernel.pin_allocator_env()
 
 
 def main() -> None:

@@ -304,3 +304,18 @@ def test_detokenize_null_row_keeps_later_rows(spark):
         "i int, tokens_clean array<int>").coalesce(1)
     got = [r["text_clean"] for r in detokenize(df).orderBy("i").collect()]
     assert got == ["Hi", "", "!", ""]
+
+
+def test_text_operators_keep_any_order(spark):
+    """``keep`` listed out of schema order still lands each value in its
+    own column (the output follows the schema order)."""
+    from hidden_characters_detector_spark.operators.clean import (
+        clean_documents, document_events)
+
+    df = spark.createDataFrame([("d1", "web", "a​b")],
+                               "doc_id string, source string, text string")
+    for op in (clean_documents, document_events):
+        out = op(df, keep=["source", "doc_id"])
+        assert out.columns[:2] == ["doc_id", "source"]
+        r = out.collect()[0]
+        assert (r["doc_id"], r["source"]) == ("d1", "web"), op.__name__
