@@ -4,6 +4,7 @@ The FIXTURES.md pattern matrix, the flag matrix, and the seeded random and
 exhaustive-sweep corpora.  ``tests/test_kernel_parity.py`` runs them against
 the live reference detector; ``tests/test_kernel_golden.py`` replays the
 kernel outputs recorded from them in ``tests/golden/kernel_golden.json``.
+``clean_rows`` runs ``kernel.clean_flat`` over a list of token rows.
 """
 
 from __future__ import annotations
