@@ -19,7 +19,8 @@ Two outputs, each over ``tokens: array<int>`` or a string column:
 
 The text operators are the fused form of ``tokenize`` → token operator:
 one Python worker hop and one serialization of the corpus instead of
-three.  All four share one body, :func:`_map_kernel`.
+three.  All four share one body, :func:`kernel_batches`, which the
+streaming pipeline also runs inside its staging task.
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ COUNTER_COL_TYPES = (("n_tok_clean", "int"), ("n_detected", "int"),
 EVENT_COL_TYPES = (("line_no", "int"), ("idx", "int"), ("token", "int"),
                    ("marker_type", "string"), ("description", "string"),
                    ("action", "string"), ("replacement", "array<int>"))
-_COUNTERS = [n for n, _ in COUNTER_COL_TYPES]
+COUNTERS = [n for n, _ in COUNTER_COL_TYPES]
 _COL_TYPES = dict(COUNTER_COL_TYPES + EVENT_COL_TYPES + (
     ("tokens_clean", "array<int>"), ("text_clean", "string"),
     ("n_tok", "int")))
@@ -115,18 +116,20 @@ def _event_arrays(offsets: np.ndarray, res: kernel.KernelResult) -> dict:
     }
 
 
-def _ddl(df: DataFrame, passthrough: list[str], out_cols: list[str]) -> str:
+def output_ddl(df: DataFrame, passthrough: list[str],
+               out_cols: list[str]) -> str:
+    """Spark DDL of :func:`kernel_batches`' output over ``df``."""
     return ", ".join(
         [f"{n} {df.schema[n].dataType.simpleString()}" for n in passthrough]
         + [f"{n} {_COL_TYPES[n]}" for n in out_cols])
 
 
-def _map_kernel(df: DataFrame, in_col: str, cfg: DetectorConfig,
-                passthrough: list[str], out_cols: list[str], *,
-                events: bool = False) -> DataFrame:
-    """The one body of all four operators: decode ``in_col``, run the
-    kernel, emit the passthrough columns (fanned out per event when
-    ``events``) followed by ``out_cols``."""
+def kernel_batches(in_col: str, cfg: DetectorConfig, passthrough: list[str],
+                   out_cols: list[str], *, events: bool = False):
+    """The one body of every clean-family operator, as a ``mapInArrow``
+    function: decode ``in_col``, run the kernel, emit the passthrough
+    columns (fanned out per event when ``events``) followed by
+    ``out_cols``."""
     build = _event_arrays if events else _row_arrays
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -144,7 +147,15 @@ def _map_kernel(df: DataFrame, in_col: str, cfg: DetectorConfig,
                 kept + [cols[n]() for n in out_cols],
                 names=passthrough + out_cols)
 
-    return df.mapInArrow(run, _ddl(df, passthrough, out_cols))
+    return run
+
+
+def _map_kernel(df: DataFrame, in_col: str, cfg: DetectorConfig,
+                passthrough: list[str], out_cols: list[str], *,
+                events: bool = False) -> DataFrame:
+    return df.mapInArrow(
+        kernel_batches(in_col, cfg, passthrough, out_cols, events=events),
+        output_ddl(df, passthrough, out_cols))
 
 
 def _event_cols(event_cols: list[str] | None) -> list[str]:
@@ -168,21 +179,10 @@ def _text_passthrough(df: DataFrame, text_col: str,
             if (f.name != text_col if keep is None else f.name in keep)]
 
 
-def clean_schema(df: DataFrame) -> str:
-    """Output DDL: input columns (tokens replaced by cleaned) + counters."""
-    return _ddl(df, _token_passthrough(df, None),
-                ["tokens_clean"] + _COUNTERS)
-
-
 def clean_detect(df: DataFrame, cfg: DetectorConfig = FULL_CLEAN) -> DataFrame:
     """Clean + per-sequence stats; Arrow-batched, passthrough other columns."""
     return _map_kernel(df, "tokens", cfg, _token_passthrough(df, None),
-                       ["tokens_clean"] + _COUNTERS)
-
-
-def event_schema(df: DataFrame, keep: list[str] | None = None,
-                 event_cols: list[str] | None = None) -> str:
-    return _ddl(df, _token_passthrough(df, keep), _event_cols(event_cols))
+                       ["tokens_clean"] + COUNTERS)
 
 
 def detect_events(df: DataFrame, cfg: DetectorConfig = FULL_CLEAN, *,
@@ -211,7 +211,7 @@ def clean_documents(df: DataFrame, text_col: str = "text",
     payload = ["text_clean" if emit_text else "tokens_clean", "n_tok"]
     return _map_kernel(df, text_col, cfg,
                        _text_passthrough(df, text_col, keep),
-                       payload + _COUNTERS)
+                       payload + COUNTERS)
 
 
 def document_events(df: DataFrame, text_col: str = "text",

@@ -36,7 +36,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.synth import lists_to_flat_tokens
+from ..sources.synth import append_column, lists_to_flat_tokens
 from .dedup import _flat_shingle_hashes, _rolling_hashes, _unique_per_doc
 
 
@@ -120,32 +120,23 @@ def mark_contaminated(df: DataFrame, eval_hashes, *,
     so it drops into batch AND streaming plans unchanged — the streaming
     ingestion guard that keeps leaked benchmark items out of the clean
     sink at the door."""
-    names = [f.name for f in df.schema.fields]
-    ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}"
-                     for f in df.schema.fields] + ["contaminated boolean"])
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def flags(batch: pa.RecordBatch) -> pa.Array:
         ev = eval_hashes.value
-        for batch in batches:
-            h, hoff = _rolling_hashes(
-                *lists_to_flat_tokens(batch.column(tokens_col)), k)
-            hits = np.zeros(h.shape[0], dtype=bool)
-            if h.size and ev.size:
-                idx = np.searchsorted(ev, h.astype(np.int64))
-                idx = np.minimum(idx, ev.size - 1)
-                hits = ev[idx] == h.astype(np.int64)
-            lens = np.diff(hoff)
-            nrows = lens.shape[0]
-            flags = np.zeros(nrows, dtype=bool)
-            if hits.any():
-                row = np.repeat(np.arange(nrows, dtype=np.int64), lens)
-                np.logical_or.at(flags, row[hits], True)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in names]
-                + [pa.array(flags, type=pa.bool_())],
-                names=names + ["contaminated"])
+        h, hoff = _rolling_hashes(
+            *lists_to_flat_tokens(batch.column(tokens_col)), k)
+        hits = np.zeros(h.shape[0], dtype=bool)
+        if h.size and ev.size:
+            idx = np.searchsorted(ev, h.astype(np.int64))
+            idx = np.minimum(idx, ev.size - 1)
+            hits = ev[idx] == h.astype(np.int64)
+        lens = np.diff(hoff)
+        out = np.zeros(lens.shape[0], dtype=bool)
+        if hits.any():
+            row = np.repeat(np.arange(lens.shape[0], dtype=np.int64), lens)
+            np.logical_or.at(out, row[hits], True)
+        return pa.array(out, type=pa.bool_())
 
-    return df.mapInArrow(run, ddl)
+    return append_column(df, "contaminated", "boolean", flags)
 
 
 def contamination_report(train: DataFrame, eval_df: DataFrame, *,

@@ -29,15 +29,13 @@ crawling" (WWW 2007).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.synth import strings_to_flat_tokens
+from ..sources.synth import append_column, strings_to_flat_tokens
 
 _M61 = np.uint64((1 << 61) - 1)
 _HASH_BASE = np.uint64(1099511628211)
@@ -179,21 +177,13 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", *,
     rng = np.random.default_rng(seed)
     a = rng.integers(1, int(_M61), num_perm, dtype=np.uint64)
     b = rng.integers(0, int(_M61), num_perm, dtype=np.uint64)
-    keep = [f.name for f in df.schema.fields]
-    ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}"
-                     for f in df.schema.fields] + ["minhash array<bigint>"])
+    def signatures(batch: pa.RecordBatch) -> pa.Array:
+        sigs = _minhash_batch(batch.column(text_col), a, b, shingle_k)
+        return pa.FixedSizeListArray.from_arrays(
+            pa.array(sigs.astype(np.int64).ravel(), type=pa.int64()),
+            num_perm).cast(pa.list_(pa.int64()))
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            sigs = _minhash_batch(batch.column(text_col), a, b, shingle_k)
-            sig_arr = pa.FixedSizeListArray.from_arrays(
-                pa.array(sigs.astype(np.int64).ravel(), type=pa.int64()),
-                num_perm).cast(pa.list_(pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in keep] + [sig_arr],
-                names=keep + ["minhash"])
-
-    return df.mapInArrow(run, ddl)
+    return append_column(df, "minhash", "array<bigint>", signatures)
 
 
 def _lsh_candidates(df: DataFrame, id_col: str, text_col: str, *,
@@ -290,38 +280,28 @@ def simhash_fingerprints(df: DataFrame, text_col: str = "text", *,
 
     Vectorized: one flat shingle pass, segment-wise distinct, then 64
     per-bit ``np.add.reduceat`` majority votes — no per-doc Python."""
-    keep = [f.name for f in df.schema.fields]
-    ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}"
-                     for f in df.schema.fields] + ["simhash bigint"])
+    def fingerprints(batch: pa.RecordBatch) -> pa.Array:
+        raw, off = _flat_shingle_hashes(batch.column(text_col), shingle_k)
+        uh, offsets = _unique_per_doc(raw, off)
+        lens = np.diff(offsets)
+        nonempty = lens > 0
+        fps = np.zeros(lens.shape[0], dtype=np.uint64)
+        if uh.size:
+            starts = offsets[:-1][nonempty]
+            seg_lens = lens[nonempty].astype(np.uint64)
+            maj_fp = np.zeros(seg_lens.shape[0], dtype=np.uint64)
+            for bit in range(64):
+                bits = (uh >> np.uint64(bit)) & np.uint64(1)
+                cnt = np.add.reduceat(bits, starts)
+                maj_fp |= (cnt * np.uint64(2) > seg_lens).astype(
+                    np.uint64) << np.uint64(bit)
+            fps[nonempty] = maj_fp
+        # docs with no shingles get NULL, not 0: a 0 fingerprint would
+        # read as Hamming-0-identical to every other empty doc
+        return pa.array(fps.astype(np.int64), type=pa.int64(),
+                        mask=~nonempty)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            raw, off = _flat_shingle_hashes(batch.column(text_col),
-                                            shingle_k)
-            uh, offsets = _unique_per_doc(raw, off)
-            nrows = offsets.shape[0] - 1
-            lens = np.diff(offsets)
-            nonempty = lens > 0
-            fps = np.zeros(nrows, dtype=np.uint64)
-            if uh.size:
-                starts = offsets[:-1][nonempty]
-                seg_lens = lens[nonempty].astype(np.uint64)
-                maj_fp = np.zeros(seg_lens.shape[0], dtype=np.uint64)
-                for bit in range(64):
-                    bits = (uh >> np.uint64(bit)) & np.uint64(1)
-                    cnt = np.add.reduceat(bits, starts)
-                    maj_fp |= (cnt * np.uint64(2) > seg_lens).astype(
-                        np.uint64) << np.uint64(bit)
-                fps[nonempty] = maj_fp
-            # docs with no shingles get NULL, not 0: a 0 fingerprint would
-            # read as Hamming-0-identical to every other empty doc
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in keep]
-                + [pa.array(fps.astype(np.int64), type=pa.int64(),
-                            mask=~nonempty)],
-                names=keep + ["simhash"])
-
-    return df.mapInArrow(run, ddl)
+    return append_column(df, "simhash", "bigint", fingerprints)
 
 
 def simhash_near_dups(df: DataFrame, id_col: str = "doc_id", *,
@@ -536,20 +516,9 @@ def ngram_jaccard(df_pairs: DataFrame, *, k: int = 5) -> DataFrame:
     construction (runs only on LSH bucket-collision candidates) and batch
     vectorized (:func:`_pairwise_jaccard` — one flat rolling-hash pass per
     column + one lexsort, no per-pair Python)."""
-    keep = [f.name for f in df_pairs.schema.fields]
-    ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}"
-                     for f in df_pairs.schema.fields] + ["jaccard double"])
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            jac = _pairwise_jaccard(batch.column("text_a"),
-                                    batch.column("text_b"), k)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in keep]
-                + [pa.array(jac, type=pa.float64())],
-                names=keep + ["jaccard"])
-
-    return df_pairs.mapInArrow(run, ddl)
+    return append_column(df_pairs, "jaccard", "double", lambda b: pa.array(
+        _pairwise_jaccard(b.column("text_a"), b.column("text_b"), k),
+        type=pa.float64()))
 
 
 def verified_near_dups(df: DataFrame, id_col: str = "doc_id",

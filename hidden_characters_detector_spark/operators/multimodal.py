@@ -19,13 +19,13 @@ Schema conventions:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sources.synth import append_column
 
 MEDIA_META_DDL = ("media_meta struct<kind:string, width:int, height:int, "
                   "sample_rate:int, n_frames:int>")
@@ -127,6 +127,13 @@ def _pil_features(blobs: list, out_dim: int, Image) -> np.ndarray:
     return feats
 
 
+def _vector_rows(feats: np.ndarray) -> pa.Array:
+    """(rows, dim) float64 matrix -> Arrow ``list<double>`` rows."""
+    return pa.FixedSizeListArray.from_arrays(
+        pa.array(feats.ravel(), type=pa.float64()), feats.shape[1]
+    ).cast(pa.list_(pa.float64()))
+
+
 def decode_images(df: DataFrame, *, out_dim: int = 8,
                   deterministic_fake: bool = False,
                   media_col: str = "media") -> DataFrame:
@@ -141,34 +148,23 @@ def decode_images(df: DataFrame, *, out_dim: int = 8,
     the plumbing a codec plugs into is what downstream operators contract
     on.
     """
-    keep = [f.name for f in df.schema.fields]
-    ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}"
-                     for f in df.schema.fields]
-                    + ["img_features array<double>"])
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def features(batch: pa.RecordBatch) -> pa.Array:
         # resolve the codec inside the worker (executors may differ from
         # the driver environment on a real cluster)
         Image = None if deterministic_fake else _pil_image()
-        for batch in batches:
-            blobs = batch.column(media_col).to_pylist()
-            if deterministic_fake:
-                feats = _fake_features(blobs, out_dim)
-            elif Image is not None:
-                feats = _pil_features(blobs, out_dim, Image)
-            else:
-                raise NotImplementedError(
-                    "image codec not available (PIL not importable); "
-                    "install pillow for real decode or pass "
-                    "deterministic_fake=True for the plumbing path")
-            fl = pa.FixedSizeListArray.from_arrays(
-                pa.array(feats.ravel(), type=pa.float64()), out_dim
-            ).cast(pa.list_(pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in keep] + [fl],
-                names=keep + ["img_features"])
+        blobs = batch.column(media_col).to_pylist()
+        if deterministic_fake:
+            feats = _fake_features(blobs, out_dim)
+        elif Image is not None:
+            feats = _pil_features(blobs, out_dim, Image)
+        else:
+            raise NotImplementedError(
+                "image codec not available (PIL not importable); "
+                "install pillow for real decode or pass "
+                "deterministic_fake=True for the plumbing path")
+        return _vector_rows(feats)
 
-    return df.mapInArrow(run, ddl)
+    return append_column(df, "img_features", "array<double>", features)
 
 
 def sample_frames(df: DataFrame, *, every_n: int = 24,
@@ -207,12 +203,7 @@ def resample_audio(df: DataFrame, *, target_rate: int = 16000,
             .withColumnRenamed("img_features", "audio_features") \
             .withColumn("resampled_rate", F.lit(target_rate))
 
-    keep = [f.name for f in df.schema.fields]
-    ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}"
-                     for f in df.schema.fields]
-                    + ["audio_features array<double>"])
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def features(batch: pa.RecordBatch) -> pa.Array:
         from io import BytesIO
 
         sf_mod = _soundfile()
@@ -221,32 +212,23 @@ def resample_audio(df: DataFrame, *, target_rate: int = 16000,
                 "audio codec not available on this executor (soundfile "
                 "not importable); install soundfile for real decode or "
                 "pass deterministic_fake=True for the plumbing path")
-        for batch in batches:
-            blobs = batch.column(media_col).to_pylist()
-            feats = np.zeros((len(blobs), out_dim), dtype=np.float64)
-            for i, b in enumerate(blobs):
-                if b is None:
-                    continue
-                data, rate = sf_mod.read(BytesIO(bytes(b)),
-                                         dtype="float64")
-                mono = data.mean(axis=1) if data.ndim > 1 else data
-                if rate != target_rate and mono.size > 1:
-                    n_out = max(1, int(round(
-                        mono.size * target_rate / rate)))
-                    mono = np.interp(
-                        np.linspace(0, mono.size - 1, n_out),
-                        np.arange(mono.size), mono)
-                segs = np.array_split(mono, out_dim)
-                v = np.array([np.sqrt(np.mean(s * s)) if s.size else 0.0
-                              for s in segs])
-                norm = float(np.sqrt((v * v).sum())) or 1.0
-                feats[i] = v / norm
-            fl = pa.FixedSizeListArray.from_arrays(
-                pa.array(feats.ravel(), type=pa.float64()), out_dim
-            ).cast(pa.list_(pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in keep] + [fl],
-                names=keep + ["audio_features"])
+        blobs = batch.column(media_col).to_pylist()
+        feats = np.zeros((len(blobs), out_dim), dtype=np.float64)
+        for i, b in enumerate(blobs):
+            if b is None:
+                continue
+            data, rate = sf_mod.read(BytesIO(bytes(b)), dtype="float64")
+            mono = data.mean(axis=1) if data.ndim > 1 else data
+            if rate != target_rate and mono.size > 1:
+                n_out = max(1, int(round(mono.size * target_rate / rate)))
+                mono = np.interp(np.linspace(0, mono.size - 1, n_out),
+                                 np.arange(mono.size), mono)
+            segs = np.array_split(mono, out_dim)
+            v = np.array([np.sqrt(np.mean(s * s)) if s.size else 0.0
+                          for s in segs])
+            norm = float(np.sqrt((v * v).sum())) or 1.0
+            feats[i] = v / norm
+        return _vector_rows(feats)
 
-    return df.mapInArrow(run, ddl) \
+    return append_column(df, "audio_features", "array<double>", features) \
         .withColumn("resampled_rate", F.lit(target_rate))

@@ -22,6 +22,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.synth import append_column, lists_to_flat_tokens
+
 
 def _dot(col_a, col_b):
     return F.aggregate(F.zip_with(col_a, col_b, lambda x, y: x * y),
@@ -46,18 +48,32 @@ def cosine_topk(df: DataFrame, query: Sequence[float], *,
             .orderBy(F.desc("cosine"), id_col).limit(k))
 
 
+def _bucket_array(col: pa.Array, nbits: int, dim: int | None,
+                  get_planes) -> pa.Array:
+    """Sign-LSH bucket per vector of one Arrow batch; NULL for a NULL
+    vector."""
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    flat, offsets = lists_to_flat_tokens(col)
+    lengths = np.diff(offsets)[valid]
+    d = int(lengths[0]) if lengths.size else (dim or 0)
+    mat = flat.astype(np.float64).reshape(lengths.size, d)
+    signs = (mat @ get_planes(d)) > 0
+    bucket = np.zeros(len(col), np.int64)
+    bucket[valid] = (signs.astype(np.int64)
+                     << np.arange(nbits, dtype=np.int64)).sum(axis=1)
+    return pa.array(bucket, type=pa.int32(), mask=~valid)
+
+
 def hyperplane_buckets(df: DataFrame, *, vec_col: str = "embedding",
                        nbits: int = 16, dim: int | None = None,
                        seed: int = 42) -> DataFrame:
-    """Add ``bucket: int`` — sign-LSH bucket from nbits random hyperplanes.
+    """Add ``bucket: int`` — sign-LSH bucket from nbits random hyperplanes
+    (NULL for a NULL vector).
 
     Vectors whose angle is small agree on most signs; a batch-query search
     probes only matching (or near-matching) buckets instead of the full
     corpus.  One Arrow pass, one matmul per batch.
     """
-    keep = [f.name for f in df.schema.fields]
-    ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}"
-                     for f in df.schema.fields] + ["bucket int"])
     planes: dict[int, np.ndarray] = {}
 
     def get_planes(d: int) -> np.ndarray:
@@ -66,23 +82,8 @@ def hyperplane_buckets(df: DataFrame, *, vec_col: str = "embedding",
                 (d, nbits))
         return planes[d]
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            col = batch.column(vec_col)
-            lengths = col.value_lengths().to_numpy(zero_copy_only=False)
-            d = int(lengths[0]) if len(lengths) else (dim or 0)
-            flat = col.flatten().to_numpy(zero_copy_only=False).astype(
-                np.float64)
-            mat = flat.reshape(-1, d) if d else flat.reshape(0, 0)
-            signs = (mat @ get_planes(d)) > 0 if d else np.zeros((0, nbits))
-            bucket = (signs.astype(np.int64)
-                      << np.arange(nbits, dtype=np.int64)).sum(axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in keep]
-                + [pa.array(bucket, type=pa.int32())],
-                names=keep + ["bucket"])
-
-    return df.mapInArrow(run, ddl)
+    return append_column(df, "bucket", "int", lambda batch: _bucket_array(
+        batch.column(vec_col), nbits, dim, get_planes))
 
 
 def lsh_cosine_topk(df: DataFrame, query: Sequence[float], *,

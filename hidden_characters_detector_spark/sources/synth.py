@@ -21,7 +21,8 @@ handling).
 
 from __future__ import annotations
 
-from typing import Iterator
+import codecs
+from typing import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -77,13 +78,34 @@ def strings_to_flat_tokens(texts: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return flat, offsets
 
 
+def _int32_offsets(offsets: np.ndarray, what: str) -> pa.Array:
+    """Arrow int32 offsets.  Spark bounds Arrow batches well below 2^31, so
+    reaching it means a broken batch-size config: fail loudly rather than
+    emit a large type that would not match the declared schema."""
+    if offsets[-1] >= 2**31:
+        raise ValueError(
+            f"Arrow batch too large for {what} offsets ({int(offsets[-1])});"
+            " lower spark.sql.execution.arrow.maxRecordsPerBatch")
+    return pa.array(offsets, type=pa.int64()).cast(pa.int32())
+
+
 def flat_tokens_to_strings(flat: np.ndarray, offsets: np.ndarray) -> pa.Array:
-    """(flat codepoints, offsets) -> Arrow string array, vectorized."""
-    joined = np.ascontiguousarray(flat, dtype="<u4").tobytes().decode(
-        "utf-32-le")
-    # slice the single decoded string back into rows by codepoint offsets
-    return pa.array([joined[offsets[i]:offsets[i + 1]]
-                     for i in range(len(offsets) - 1)], type=pa.string())
+    """(flat codepoints, offsets) -> Arrow string array: one decode and one
+    UTF-8 encode per batch; a row's byte offset adds the extra bytes (1-3)
+    of the non-ASCII codepoints before it."""
+    cps = np.ascontiguousarray(flat, dtype="<u4")
+    text = codecs.utf_32_le_decode(cps)[0]
+    data = text.encode("utf-8")
+    byte_offsets = offsets
+    if len(data) != len(text):
+        wide = np.flatnonzero(cps >= 0x80)
+        extra = (1 + (cps[wide] >= 0x800).astype(np.int64)
+                 + (cps[wide] >= 0x10000))
+        byte_offsets = offsets + np.concatenate([[0], np.cumsum(extra)])[
+            np.searchsorted(wide, offsets)]
+    return pa.StringArray.from_buffers(
+        len(offsets) - 1, _int32_offsets(byte_offsets, "string").buffers()[1],
+        pa.py_buffer(data))
 
 
 def lists_to_flat_tokens(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -107,19 +129,24 @@ def flat_tokens_to_lists(values: np.ndarray, offsets: np.ndarray,
                          mask: np.ndarray | None = None) -> pa.ListArray:
     """(flat values, offsets) -> Arrow ``list<int32>`` array; rows where
     ``mask`` is True are NULL."""
-    if offsets[-1] >= 2**31:
-        # list<int32> needs int32 offsets; Spark's Arrow batches are bounded
-        # by maxRecordsPerBatch well below this, so reaching it means the
-        # batch size config is broken: fail loudly instead of emitting a
-        # large_list that would not match the declared schema.
-        raise ValueError(
-            f"Arrow batch too large for list<int32> offsets "
-            f"({int(offsets[-1])} values); lower "
-            "spark.sql.execution.arrow.maxRecordsPerBatch")
     return pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int64()).cast(pa.int32()),
+        _int32_offsets(offsets, "list<int32>"),
         pa.array(values).cast(pa.int32()),
         mask=None if mask is None else pa.array(mask))
+
+
+def append_column(df: DataFrame, name: str, type_ddl: str,
+                  fn: Callable[[pa.RecordBatch], pa.Array]) -> DataFrame:
+    """``df`` plus the column ``name`` of Spark type ``type_ddl``, computed
+    from each Arrow batch by ``fn`` in one ``mapInArrow`` pass."""
+    ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}"
+                     for f in df.schema.fields] + [f"{name} {type_ddl}"])
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield batch.append_column(name, fn(batch))
+
+    return df.mapInArrow(run, ddl)
 
 
 def inject_flat(flat: np.ndarray, offsets: np.ndarray, doc_seed: np.ndarray,

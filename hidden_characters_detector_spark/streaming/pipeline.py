@@ -13,10 +13,13 @@ becomes (north_star):
             made a slowly-updating stream)
 
 The production entry point is :func:`single_pass_pipeline`: branches A and B
-run in ONE query/foreachBatch so the kernel runs once per micro-batch (the
-density branch aggregates the committed sink's per-sequence counters).  The
-standalone stateful operators below remain the watermark/late-data/session
-surface (T1-T3) and are exercised by tests and continuous-mode deployments.
+run in ONE query as ONE Spark job per micro-batch.  Each task runs the
+kernel once and stages the cleaned rows, the quarantined rows and the
+per-(window, source) density partials (from the kernel's per-sequence
+counters) as Parquet files itself; the driver publishes exactly those
+files.  The standalone stateful operators below remain the
+watermark/late-data/session surface (T1-T3) and are exercised by tests and
+continuous-mode deployments.
 
 All operators are stateless ``mapInArrow`` + built-in stateful SS operators,
 so checkpoint/WAL resume and state-store management are Spark's.
@@ -24,11 +27,25 @@ so checkpoint/WAL resume and state-store management are Spark's.
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.kernel import DetectorConfig, FULL_CLEAN
-from ..operators.clean import clean_detect, detect_events
+from ..operators.clean import (COUNTERS, clean_detect, detect_events,
+                               kernel_batches, output_ddl)
+from ..operators.quarantine import (QUARANTINE_REASON_COL,
+                                    with_quarantine_reason)
+from ..sinks.exactly_once import (LINEAGE_DDL, STAGED_DDL, STAGED_SCHEMA,
+                                  STAGING_DIR, Output, StagedFile,
+                                  _posix_dir, arrow_schema, publish,
+                                  read_sink, with_lineage)
 
 TOKEN_STREAM_SCHEMA = ("doc_id string, tokens array<int>, n_tok int, "
                        "source string, event_time timestamp")
@@ -200,73 +217,72 @@ def scan_stats_stream(cleaned: DataFrame, *,
                     "total_markers_detected", "total_markers_processed"))
 
 
-def _source_wal_files(spark: SparkSession, checkpoint_dir: str,
-                      batch_id: int, source_idx: int = 0) -> list[str]:
-    """The exact input files of micro-batch ``batch_id``, from the file
-    source's checkpoint WAL (``sources/<idx>/<batch_id>``: a version line
-    followed by one JSON entry per file).  This is the list Spark commits
-    BEFORE executing the batch and re-reads on crash replay — the same
-    determinism contract the exactly-once sink rests on.
+def gate_stream(tok: DataFrame, *, decontam_eval=None, decontam_k: int = 20,
+                history_bloom: tuple[bytes, int, int] | None = None
+                ) -> DataFrame:
+    """The ingestion gates; dropped rows reach no sink and are counted as
+    observed metrics.
 
-    Every ``compactInterval``-th batch (default 10) Spark writes
-    ``<batch_id>.compact`` instead: a CUMULATIVE log of every file seen so
-    far, each entry tagged with its ``batchId`` — so the compact form is
-    read with a batchId filter.
-
-    The read goes through the JVM's Hadoop ``FileSystem`` (the checkpoint's
-    own scheme — ``file://``, ``hdfs://``, ``s3a://`` — resolves to the
-    right implementation), so the gate works wherever Spark itself can
-    checkpoint; no driver-local I/O assumption.  A tiny driver-side
-    metadata read, no Spark job.
-
-    Fails LOUDLY when the batch has no WAL entry at all
-    (``FileNotFoundError``): Spark writes the entry before executing every
-    batch — even a no-data one — so a missing file means the log layout is
-    not what this parser expects (format drift, wrong ``source_idx``) and
-    silently returning ``[]`` would drop quarantined rows from BOTH sinks.
-    A present-but-empty entry is a genuine no-data batch ⇒ ``[]``; a
-    malformed entry line raises from the JSON parser for the same reason.
+    * ``decontam_eval``: rows sharing a token ``decontam_k``-gram with the
+      broadcast eval set (``operators.decontam.mark_contaminated``, a
+      stateless ``mapInArrow``) — ``decontam_metrics.n_contaminated``;
+    * ``history_bloom``: rows whose token array is in the previous
+      snapshot's Bloom filter (``(bits, m, k)`` from ``bloom.bloom_build``
+      keyed on ``cast(tokens as string)``; zero false negatives, a false
+      positive drops a novel row, the safe direction) — a codegen
+      projection that complements ``dropDuplicatesWithinWatermark``, which
+      cannot see prior runs — ``history_metrics.n_history_dropped``.
     """
-    import json
+    if decontam_eval is not None:
+        from ..operators.decontam import mark_contaminated
+        marked = mark_contaminated(tok, decontam_eval, k=decontam_k)
+        marked = marked.observe(
+            "decontam_metrics",
+            F.sum(F.col("contaminated").cast("long"))
+            .alias("n_contaminated"))
+        tok = marked.where(~F.col("contaminated")).drop("contaminated")
+    if history_bloom is not None:
+        from ..operators.bloom import bloom_might_contain
+        h_bits, h_m, h_k = history_bloom
+        gated = bloom_might_contain(
+            tok, h_bits, F.col("tokens").cast("string"),
+            m=h_m, k=h_k, out_col="__in_history")
+        gated = gated.observe(
+            "history_metrics",
+            F.sum(F.col("__in_history").cast("long"))
+            .alias("n_history_dropped"))
+        tok = gated.where(~F.col("__in_history")).drop("__in_history")
+    return tok
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    base = f"{checkpoint_dir.rstrip('/')}/sources/{source_idx}/{batch_id}"
 
-    def read_utf8(path_str: str) -> str:
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        fs = path.getFileSystem(hconf)
-        stream = fs.open(path)
-        try:
-            return jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8")
-        finally:
-            stream.close()
+BATCH_ID_PROPERTY = "hcd.pipeline.batch_id"
+DENSITY_DDL = ("window_start timestamp, window_end timestamp, "
+               "source string, n_detections bigint, n_hidden bigint, "
+               "n_seq bigint")
+_WINDOW = "__density_window"
+_COUNTS = ("n_seq", "n_quarantined", "n_detected", "n_seq_with_markers")
+# a task's records: its staged files, then one row of counts
+_RECORD_DDL = STAGED_DDL + "".join(f", {c} bigint" for c in _COUNTS)
+_RECORD_SCHEMA = pa.schema(list(STAGED_SCHEMA)
+                           + [(c, pa.int64()) for c in _COUNTS])
 
-    def exists(path_str: str) -> bool:
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf).exists(path)
 
-    def entries(text: str) -> list[dict]:
-        out = []
-        for line in text.splitlines():
-            line = line.strip()
-            if not line or line.startswith("v"):
-                continue
-            out.append(json.loads(line))
-        return out
-
-    if exists(base):
-        return [e["path"] for e in entries(read_utf8(base))]
-    if exists(base + ".compact"):
-        return [e["path"] for e in entries(read_utf8(base + ".compact"))
-                if e.get("batchId") == batch_id]
-    raise FileNotFoundError(
-        f"no source WAL entry for batch {batch_id} at {base}[.compact] — "
-        "Spark commits this file before executing every batch, so its "
-        "absence means the checkpoint log layout is not what the "
-        "quarantine gate expects (Spark log-format drift or a wrong "
-        "source index); refusing to silently drop quarantined rows")
+def _density_partials(good: pa.Table) -> pa.Table:
+    """Per-(window, source) sums of a task's good rows.  A row without an
+    event time has no window (``F.window`` drops it too)."""
+    good = good.filter(pc.is_valid(good.column("event_time")))
+    w = good.column(_WINDOW)
+    keys = ["window_start", "window_end", "source"]
+    sums = ["n_detections", "n_hidden", "n_seq"]
+    parts = pa.table(
+        [pc.struct_field(w, [0]), pc.struct_field(w, [1]),
+         good.column("source"), good.column("n_detected").cast(pa.int64()),
+         good.column("n_hidden").cast(pa.int64()),
+         pa.array(np.ones(good.num_rows, np.int64))], names=keys + sums)
+    return (parts.group_by(keys, use_threads=False)
+            .aggregate([(c, "sum") for c in sums])
+            .select(keys + [f"{c}_sum" for c in sums])
+            .rename_columns(keys + sums))
 
 
 def single_pass_pipeline(spark: SparkSession, input_path: str, out_dir: str,
@@ -279,206 +295,119 @@ def single_pass_pipeline(spark: SparkSession, input_path: str, out_dir: str,
                          decontam_eval=None, decontam_k: int = 20,
                          history_bloom: tuple[bytes, int, int] | None = None,
                          query_name: str = "hcd-pipeline"):
-    """The full reference dataflow as ONE streaming query, cleaning each
-    micro-batch exactly once.
+    """The full reference dataflow as ONE streaming query and ONE Spark
+    job per micro-batch.
 
-    The round-1 design ran branch A (clean → sink) and branch B (events →
-    salted density) as two independent queries — each re-scanned and
-    re-cleaned the input, and the sink recomputed every batch for its
-    manifest count, so one logical clean pass cost ~3×.  This version runs a
-    single ``foreachBatch``:
-
-    1. the cleaned batch is written to the idempotent exactly-once sink
-       partition (the only compute of the kernel);
-    2. the row count comes from the written files' parquet footers;
-    3. the windowed detection density is derived from the *committed* sink
-       files' per-sequence counters (``n_detected``/``n_hidden``, map-side
-       pre-aggregated inside the kernel) — a column-pruned re-read of five
-       narrow int columns, never a second kernel pass, never an event
-       explosion.  Partials land in ``density/batch_id=N`` (idempotent
-       overwrite); totals are additive, so :func:`read_density` folds them
-       at read time.  No salting is needed here: the per-batch aggregation
-       is a plain batch hash-agg with map-side partial aggregation, so a
-       hot ``source`` key collapses to one row per map partition before the
-       (tiny) shuffle.
+    Each partition of the batch runs one ``mapInArrow`` task that runs the
+    clean kernel once over its rows (:func:`..operators.clean
+    .kernel_batches`) and stages, with pyarrow, uniquely named Parquet files
+    under ``<out>/_staging``: the good rows' cleaned output, the bad rows
+    verbatim with their reason, and the per-(window, source) density
+    partials of the good rows' counters.  It yields only the small file
+    records plus one row of counts, which ``observe("clean_metrics")``
+    sums.  The foreachBatch does one ``collect()`` of those records — the
+    batch's only job, in the job group ``<query_name>/batch=<N>`` — and
+    :func:`..sinks.exactly_once.publish` moves exactly the collected files
+    into ``cleaned/``, ``quarantine/`` and ``density/batch_id=N``, writes
+    the manifests last and deletes every other staged file.  The tasks
+    read the batch id from the :data:`BATCH_ID_PROPERTY` local property.
 
     Bad records (schema-valid but semantically null rows — null/empty
     doc_id, null tokens, null event_time, n_tok contradicting the array;
     see :mod:`..operators.quarantine`) never fail the job and never reach
-    the clean sink: the validity gate runs as a codegen projection BEFORE
-    the kernel (bad rows' tokens are swapped for an empty array, so their
-    kernel cost is ~zero and the good-write filter drops them post-kernel),
-    and the foreachBatch routes them verbatim + reason to
-    ``<out>/quarantine/batch_id=N`` (same idempotent overwrite contract as
-    the main sink) with an ``n_quarantined`` observed metric.  The
-    quarantine rows are derived from a KERNEL-FREE raw re-read of the
-    micro-batch's own input files, resolved from the file source's WAL
-    (``<checkpoint>/sources/0/<batch_id>`` — the exact file list Spark
-    itself commits before executing the batch and replays after a crash,
-    so the re-read is deterministic by the same contract that makes the
-    sink exactly-once; ``batch_df.inputFiles()`` is empty inside
-    foreachBatch).  A filter on the passthrough reason column cannot be
-    pushed through ``mapInArrow``, so re-filtering the batch handle would
-    re-run the kernel, and persisting the cleaned batch to share one pass
-    costs ~3× wall time on this VM (measured: 84 s vs 27 s median for the
-    4.8M-row drain) — the raw re-scan is a cheap codegen filter over files
-    already in page cache.
+    the clean sink: the validity gate is a codegen projection before the
+    kernel (their kernel cost is ~zero), and the task routes them verbatim
+    + reason to ``<out>/quarantine/batch_id=N`` (only for batches that
+    have any) and counts them as ``n_quarantined``.  They come from the
+    already-gated stream (:func:`gate_stream`), so a row a gate dropped
+    reaches no sink.
+
+    Density windows are Spark's own ``F.window`` over ``event_time``,
+    projected before the kernel; the partials are additive counts that
+    :func:`read_density` folds.
 
     Returns the started StreamingQuery.
     """
-    import os
-
-    from ..operators.quarantine import (QUARANTINE_REASON_COL,
-                                        with_quarantine_reason)
-    from ..sinks.exactly_once import (_posix_dir, parquet_dir_rows,
-                                      write_batch_partition,
-                                      write_manifest)
-
-    # the parquet manifest sink's metadata I/O is POSIX (see
-    # sinks.exactly_once._posix_dir): normalize file:// and refuse other
-    # schemes up front, BEFORE the query starts, rather than failing (or
-    # silently no-opting rmtree) mid-batch.  The CHECKPOINT may be any
-    # scheme — its reads go through the Hadoop FileSystem.
+    # the sink's metadata I/O is POSIX (sinks.exactly_once._posix_dir):
+    # refuse other schemes before the query starts, not mid-batch
     out_dir = _posix_dir(out_dir, what="pipeline output")
+    tok = gate_stream(read_token_stream(spark, input_path,
+                                        max_files_per_trigger),
+                      decontam_eval=decontam_eval, decontam_k=decontam_k,
+                      history_bloom=history_bloom)
+    tok = (with_quarantine_reason(tok) if quarantine else
+           tok.withColumn(QUARANTINE_REASON_COL, F.lit(None).cast("string")))
+    raw_cols = tok.columns
+    # a row without an event time gets the epoch's window, so the window
+    # projection filters no row (its density is dropped in the task)
+    tok = tok.withColumn(_WINDOW, F.window(
+        F.coalesce("event_time", F.lit(0).cast("timestamp")), window))
+    keep = [c for c in raw_cols if c not in ("tokens", QUARANTINE_REASON_COL)]
+    payload = ["tokens_clean"] + COUNTERS
+    run_kernel = kernel_batches("tokens", cfg, tok.columns, payload)
+    staging = os.path.join(out_dir, STAGING_DIR)
+    outputs = {
+        "cleaned": Output(os.path.join(out_dir, "cleaned"), arrow_schema(
+            f"{output_ddl(tok, keep, payload)}, partition_id int, "
+            f"{LINEAGE_DDL}")),
+        "quarantine": Output(os.path.join(out_dir, "quarantine"), None),
+        "density": Output(os.path.join(out_dir, "density"),
+                          arrow_schema(DENSITY_DDL), manifest=False),
+    }
 
-    tok = read_token_stream(spark, input_path,
-                            max_files_per_trigger=max_files_per_trigger)
-    if decontam_eval is not None:
-        # streaming ingestion decontamination: the broadcast eval-shingle
-        # gate (operators.decontam.mark_contaminated) is a STATELESS
-        # mapInArrow, so it drops into the stream unchanged; contaminated
-        # rows never reach the kernel or any sink, and the count surfaces
-        # as an observed metric per batch
-        from ..operators.decontam import mark_contaminated
-        marked = mark_contaminated(tok, decontam_eval, k=decontam_k)
-        marked = marked.observe(
-            "decontam_metrics",
-            F.sum(F.col("contaminated").cast("long"))
-            .alias("n_contaminated"))
-        tok = marked.where(~F.col("contaminated")).drop("contaminated")
-    if history_bloom is not None:
-        # cross-snapshot ingestion dedup: drop sequences whose token
-        # array is already in the PREVIOUS snapshot's Bloom filter
-        # (``(bits, m, k)`` from ``bloom.bloom_build`` keyed on
-        # ``cast(tokens as string)``).  Zero false negatives — nothing
-        # already trained on re-enters; false positives drop a few novel
-        # rows, the safe direction.  The probe is a stateless codegen
-        # projection (bit tests against the plan-literal bitset), so it
-        # drops into the stream unchanged; it complements
-        # ``dropDuplicatesWithinWatermark``, which bounds WITHIN-stream
-        # duplicate state but cannot see prior runs.
-        from ..operators.bloom import bloom_might_contain
-        h_bits, h_m, h_k = history_bloom
-        gated = bloom_might_contain(
-            tok, h_bits, F.col("tokens").cast("string"),
-            m=h_m, k=h_k, out_col="__in_history")
-        gated = gated.observe(
-            "history_metrics",
-            F.sum(F.col("__in_history").cast("long"))
-            .alias("n_history_dropped"))
-        tok = gated.where(~F.col("__in_history")).drop("__in_history")
-    reason = F.col(QUARANTINE_REASON_COL)
-    # bad rows flow through the kernel untouched: the Arrow kernel treats a
-    # NULL token list as empty (sources.synth.lists_to_flat_tokens), so no
-    # per-row array rewrite is needed — the reason column is the only
-    # added projection, and the good-write filter drops bad rows after the
-    # (for them ~free) kernel pass
-    if quarantine:
-        tok = with_quarantine_reason(tok)
-    else:
-        tok = tok.withColumn(QUARANTINE_REASON_COL,
-                             F.lit(None).cast("string"))
-    cleaned = clean_stream(tok, cfg)
-    # per-batch marker-rate telemetry, zero extra passes: observe() folds
-    # these aggregates into the batch's own execution and surfaces them in
-    # every progress event's observedMetrics (ops monitoring at no cost —
-    # the A3/A4 ScanStats+throughput telemetry of the reference, ref
-    # :926-948, as streaming metrics)
-    cleaned = cleaned.observe(
-        "clean_metrics",
-        F.count(F.lit(1)).alias("n_seq"),
-        F.sum("n_detected").alias("n_detected"),
-        F.sum(F.col("had_marker").cast("long")).alias("n_seq_with_markers"),
-        F.sum(reason.isNotNull().cast("long")).alias("n_quarantined"))
-    sink_dir = os.path.join(out_dir, "cleaned")
-    dens_dir = os.path.join(out_dir, "density")
-    quar_dir = os.path.join(out_dir, "quarantine")
+    def stage(batches):
+        tc = TaskContext.get()
+        batch_id = int(tc.getLocalProperty(BATCH_ID_PROPERTY))
+        files = {k: StagedFile(staging, k) for k in outputs}
+        good, counts = [], np.zeros(len(_COUNTS), np.int64)
+        for out in run_kernel(batches):
+            t = pa.Table.from_batches([out])
+            bad = pc.is_valid(t.column(QUARANTINE_REASON_COL))
+            n_bad = pc.sum(bad, min_count=0).as_py()
+            counts += [t.num_rows, n_bad] + [
+                pc.sum(t.column(c), min_count=0).as_py()
+                for c in ("n_detected", "had_marker")]
+            if n_bad:
+                files["quarantine"].write(t.select(raw_cols).filter(bad))
+            t = t.select(keep + payload + [_WINDOW])
+            if n_bad:
+                t = t.filter(pc.invert(bad))
+            files["cleaned"].write(with_lineage(
+                t.select(keep + payload).append_column(
+                    "partition_id", pa.array(
+                        np.full(t.num_rows, tc.partitionId(), np.int32))),
+                batch_id))
+            good.append(t.select([_WINDOW, "event_time", "source",
+                                  "n_detected", "n_hidden"]))
+        if good:
+            files["density"].write(_density_partials(pa.concat_tables(good)))
+        recs = [r for f in files.values() for r in f.record()]
+        if counts[0]:
+            recs.append(dict(zip(_COUNTS, counts.tolist())))
+        yield pa.RecordBatch.from_pylist(recs, schema=_RECORD_SCHEMA)
+
+    # observe() folds the tasks' counts into the batch's own execution and
+    # surfaces them in every progress event (the reference's ScanStats +
+    # throughput telemetry, ref :926-948) at no extra pass
+    staged = tok.mapInArrow(stage, _RECORD_DDL).observe(
+        "clean_metrics", F.coalesce(F.sum("n_seq"), F.lit(0)).alias("n_seq"),
+        *[F.sum(c).alias(c) for c in ("n_detected", "n_seq_with_markers",
+                                      "n_quarantined")])
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        good = batch_df.where(reason.isNull()).drop(QUARANTINE_REASON_COL)
-        write_batch_partition(good, batch_id, sink_dir)  # the kernel pass
-        files = (_source_wal_files(batch_df.sparkSession, checkpoint_dir,
-                                   batch_id)
-                 if quarantine else [])
-        if files:
-            raw = batch_df.sparkSession.read.schema(
-                TOKEN_STREAM_SCHEMA).parquet(*files)
-            bad = with_quarantine_reason(raw).where(reason.isNotNull())
-            if decontam_eval is not None:
-                # the raw re-scan must honor the decontam gate too:
-                # without this, a row that is BOTH contaminated and
-                # quarantine-bad would land verbatim (leaked tokens and
-                # all) in the quarantine sink, breaking the "contaminated
-                # rows reach no sink" guarantee and desyncing
-                # n_quarantined from the quarantine dir's row count.
-                # Applied AFTER the (cheap codegen) bad-row filter: the
-                # rolling-hash kernel then touches only the tiny bad
-                # subset, not every raw row a second time — the filters
-                # commute, so the quarantine set is identical
-                from ..operators.decontam import mark_contaminated
-                bad = (mark_contaminated(bad, decontam_eval, k=decontam_k)
-                       .where(~F.col("contaminated"))
-                       .drop("contaminated"))
-            if history_bloom is not None:
-                # same commute argument as the decontam gate above: the
-                # stream-side history filter ran BEFORE quarantine
-                # marking, so the raw re-scan must drop in-history rows
-                # too or the quarantine dir would disagree with the
-                # n_quarantined observed metric (and resurrect rows the
-                # ingestion policy already excluded)
-                from ..operators.bloom import bloom_might_contain
-                h_bits, h_m, h_k = history_bloom
-                bad = (bloom_might_contain(
-                           bad, h_bits, F.col("tokens").cast("string"),
-                           m=h_m, k=h_k, out_col="__in_history")
-                       .where(~F.col("__in_history"))
-                       .drop("__in_history"))
-            # ONE raw scan: write unconditionally (deterministic per batch
-            # — fixed WAL file set — so the overwrite stays idempotent
-            # under replay), then drop the dir again if the batch was
-            # clean: no empty dirs accumulating at one-per-batch rate and
-            # no second existence-check scan
-            qpath = os.path.join(quar_dir, f"batch_id={batch_id}")
-            # repartition(1), NOT coalesce(1): coalesce propagates the
-            # 1-partition constraint up through the filter into the SCAN,
-            # single-threading the whole raw re-read (measured 16 s vs 3 s
-            # for the 4.8M-row batch); repartition keeps the scan parallel
-            # and only the (tiny) post-filter write runs in one task
-            bad.repartition(1).write.mode("overwrite").parquet(qpath)
-            n_bad = parquet_dir_rows(qpath)
-            if n_bad == 0:
-                import shutil
-                shutil.rmtree(qpath, ignore_errors=True)
-            else:
-                # same manifest contract as the main sink, so compact_sink
-                # can fold quarantine batch dirs too (its manifest gate
-                # would otherwise skip every one of them forever)
-                write_manifest(quar_dir, batch_id, n_bad)
-        committed = batch_df.sparkSession.read.parquet(
-            os.path.join(sink_dir, f"batch_id={batch_id}"))
-        dens = (committed
-                .groupBy(F.window("event_time", window), "source")
-                .agg(F.sum("n_detected").alias("n_detections"),
-                     F.sum("n_hidden").alias("n_hidden"),
-                     F.count("*").alias("n_seq"))
-                .select(F.col("window.start").alias("window_start"),
-                        F.col("window.end").alias("window_end"),
-                        "source", "n_detections", "n_hidden", "n_seq"))
-        dens_path = os.path.join(dens_dir, f"batch_id={batch_id}")
-        dens.coalesce(1).write.mode("overwrite").parquet(dens_path)
-        parquet_dir_rows(dens_path)  # footer sanity touch (no job)
+        sc = batch_df.sparkSession.sparkContext
+        run_group = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(f"{query_name}/batch={batch_id}",
+                       f"{query_name} micro-batch {batch_id}", True)
+        sc.setLocalProperty(BATCH_ID_PROPERTY, str(batch_id))
+        try:
+            records = [r.asDict() for r in batch_df.collect()]
+        finally:  # give back the stream's group: query.stop() cancels it
+            sc.setLocalProperty(BATCH_ID_PROPERTY, None)
+            sc.setJobGroup(run_group, None, True)
+        publish(outputs, batch_id, records, staging)
 
-    writer = (cleaned.writeStream.foreachBatch(write_batch)
+    writer = (staged.writeStream.foreachBatch(write_batch)
               .queryName(query_name)
               .option("checkpointLocation", checkpoint_dir))
     if trigger_available_now:
@@ -499,10 +428,6 @@ def read_quarantine(spark: SparkSession, out_dir: str) -> DataFrame:
     .read_sink`).  Empty WITH THE SAME SCHEMA when no batch has quarantined
     anything — the partition column is cast to int so callers never see a
     schema that depends on whether anything was quarantined."""
-    import os
-
-    from ..sinks.exactly_once import _posix_dir, read_sink
-
     qdir = os.path.join(_posix_dir(out_dir, what="pipeline output"),
                         "quarantine")
     has_batches = os.path.isdir(qdir) and any(
@@ -522,11 +447,8 @@ def read_density(spark: SparkSession, out_dir: str) -> DataFrame:
     cluster scale the partials table stays tiny (windows × sources × batches
     rows) and this read-time fold is a broadcast-sized aggregation.
     """
-    import os
-
-    part = spark.read.option("basePath", os.path.join(out_dir, "density")) \
-        .parquet(os.path.join(out_dir, "density", "batch_id=*"))
-    return (part.groupBy("window_start", "window_end", "source")
+    return (read_sink(spark, os.path.join(out_dir, "density"))
+            .groupBy("window_start", "window_end", "source")
             .agg(F.sum("n_detections").alias("n_detections"),
                  F.sum("n_hidden").alias("n_hidden"),
                  F.sum("n_seq").alias("n_seq")))

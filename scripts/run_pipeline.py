@@ -83,8 +83,7 @@ def main() -> None:
                     help="route semantically null rows (null/empty doc_id, "
                          "null tokens/event_time, n_tok mismatch) to "
                          "<output>/quarantine instead of cleaning them "
-                         "(default on; --no-quarantine skips the gate and "
-                         "its per-batch raw re-scan)")
+                         "(default on; --no-quarantine skips the gate)")
     ap.add_argument("--decontam-eval", default=None, metavar="DIR",
                     help="token-table parquet (doc_id, tokens) of an eval "
                          "benchmark: rows sharing any token k-gram with it "
@@ -179,41 +178,17 @@ def main() -> None:
         history_bloom = (bloom.bloom_build(hist, "key", m=m, k=k), m, k)
 
     if args.sink == "iceberg":
-        # surfaces a clear error + recipe when the jars are absent
-        from pyspark.sql import functions as F
-
+        # surfaces a clear error + recipe when the jars are absent; the
+        # ingestion gates apply on this branch too, with the same observed
+        # drop counts, so rows never vanish unexplained
         from hidden_characters_detector_spark.sinks.exactly_once import (
             iceberg_sink)
-        tok = pipeline.read_token_stream(
-            spark, args.input,
-            max_files_per_trigger=args.max_files_per_trigger)
-        if decontam_bc is not None:
-            # the gate must apply on this branch too, not silently no-op —
-            # and with the same observed drop count the single-pass
-            # pipeline surfaces, so rows never vanish unexplained
-            from hidden_characters_detector_spark.operators.decontam import (
-                mark_contaminated)
-            marked = mark_contaminated(tok, decontam_bc,
-                                       k=args.decontam_k)
-            marked = marked.observe(
-                "decontam_metrics",
-                F.sum(F.col("contaminated").cast("long"))
-                .alias("n_contaminated"))
-            tok = (marked.where(~F.col("contaminated"))
-                   .drop("contaminated"))
-        if history_bloom is not None:
-            # same no-silent-no-op rule as the decontam gate
-            from hidden_characters_detector_spark.operators.bloom import (
-                bloom_might_contain)
-            h_bits, h_m, h_k = history_bloom
-            gated = bloom_might_contain(
-                tok, h_bits, F.col("tokens").cast("string"),
-                m=h_m, k=h_k, out_col="__in_history")
-            gated = gated.observe(
-                "history_metrics",
-                F.sum(F.col("__in_history").cast("long"))
-                .alias("n_history_dropped"))
-            tok = gated.where(~F.col("__in_history")).drop("__in_history")
+        tok = pipeline.gate_stream(
+            pipeline.read_token_stream(
+                spark, args.input,
+                max_files_per_trigger=args.max_files_per_trigger),
+            decontam_eval=decontam_bc, decontam_k=args.decontam_k,
+            history_bloom=history_bloom)
         q = iceberg_sink(pipeline.clean_stream(tok, cfg), args.output,
                          os.path.join(args.checkpoint, "sink"),
                          trigger_available_now=args.available_now,

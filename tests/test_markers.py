@@ -1,6 +1,51 @@
-"""Table parity: our codepoint tables == the reference module's, exactly."""
+"""Table parity: our codepoint tables == the reference module's, exactly.
+
+The live-reference tests skip where the reference detector is absent; the
+same eight tables are then checked against ``tests/golden/markers_golden.json``
+(its header says where the recorded tables came from).  Regenerate only
+after the tables have been re-verified against the live reference:
+``PYTHONPATH=. python tests/test_markers.py --write <commit>``.
+"""
+
+import json
+import sys
+from pathlib import Path
+
+import pytest
 
 from hidden_characters_detector_spark import markers
+
+GOLDEN = Path(__file__).parent / "golden" / "markers_golden.json"
+
+
+def snapshot() -> dict:
+    """The eight tables the live-reference tests compare, as JSON data."""
+    def keyed(d):
+        return {str(cp): v for cp, v in sorted(d.items())}
+
+    return {
+        "hidden": sorted(markers.HIDDEN_CODEPOINTS),
+        "typographic": sorted(markers.TYPOGRAPHIC_CODEPOINTS),
+        "ivs": sorted(markers.IVS_CODEPOINTS),
+        "word_common": sorted(markers.WORD_COMMON_CODEPOINTS),
+        "replacement_map": keyed({cp: list(v) for cp, v in
+                                  markers.REPLACEMENT_MAP.items()}),
+        "hidden_descriptions": keyed(markers.HIDDEN_DESCRIPTIONS),
+        "typographic_descriptions": keyed(markers.TYPOGRAPHIC_DESCRIPTIONS),
+        "ivs_descriptions": keyed({cp: markers.ivs_description(cp)
+                                   for cp in markers.IVS_CODEPOINTS}),
+    }
+
+
+@pytest.mark.parametrize("table", ["hidden", "typographic", "ivs",
+                                   "word_common", "replacement_map",
+                                   "hidden_descriptions",
+                                   "typographic_descriptions",
+                                   "ivs_descriptions"])
+def test_table_matches_golden(table):
+    with open(GOLDEN, encoding="utf-8") as f:
+        golden = json.load(f)["tables"]
+    assert snapshot()[table] == golden[table]
 
 
 def test_hidden_set_matches(refmod):
@@ -86,3 +131,30 @@ def test_desc_lut_covers_every_marker():
         == markers.TYPOGRAPHIC_DESCRIPTIONS[0x2019]
     # non-markers map to the null slot
     assert kernel.DESC_IDX_LUT[ord("a")] == 0
+
+
+def write_golden(commit: str) -> None:
+    header = {
+        "recorded_at_commit": commit,
+        "provenance": (
+            "The marker tables of hidden_characters_detector_spark/"
+            "markers.py at the commit above. markers.py is unchanged there "
+            "since e8b8835. This file's live-reference tests (the tables "
+            "against the reference detector's MARKER_CHARS_*, "
+            "WORD_COMMON_CHARS, TYPOGRAPHIC_REPLACEMENTS and *_MARKERS "
+            "description dicts) were part of the full suite that passed "
+            "with the reference present at the r6 close (524 passed, 2 "
+            "skipped; OPTIMIZATION_r06.md), so these tables stand in for "
+            "the reference on hosts without it."),
+    }
+    with open(GOLDEN, "w", encoding="utf-8") as f:
+        json.dump({"header": header, "tables": snapshot()}, f, indent=1,
+                  ensure_ascii=False)
+        f.write("\n")
+
+
+if __name__ == "__main__":
+    if sys.argv[1:2] != ["--write"] or len(sys.argv) != 3:
+        sys.exit("usage: PYTHONPATH=. python tests/test_markers.py "
+                 "--write COMMIT")
+    write_golden(sys.argv[2])

@@ -307,6 +307,41 @@ def test_auto_nbits_bounds_bucket_size(spark):
     assert auto_nbits(10**12) == 24
 
 
+def _signs_bucket(vec, planes) -> int:
+    signs = (np.asarray(vec, dtype=np.float64) @ planes) > 0
+    return int((signs.astype(np.int64) << np.arange(planes.shape[1])).sum())
+
+
+@pytest.mark.parametrize("rows", [[None, [1.0, 2.0]],
+                                  [[1.0, 2.0], None, [-3.0, 4.0]]],
+                         ids=["null_first", "null_inside"])
+def test_hyperplane_buckets_null_vector(rows):
+    """One Arrow batch: a NULL vector gets a NULL bucket and every other row
+    its own sign bucket (a leading NULL used to raise on the NaN length,
+    an inner one dropped a bucket so the batch came out a row short)."""
+    import pyarrow as pa
+
+    def planes(d):
+        return np.random.default_rng(42).standard_normal((d, 16))
+
+    got = similarity._bucket_array(
+        pa.array(rows, type=pa.list_(pa.float64())), 16, None,
+        planes).to_pylist()
+    assert got == [None if r is None else _signs_bucket(r, planes(2))
+                   for r in rows]
+
+
+def test_hyperplane_buckets_null_vector_spark(spark):
+    df = spark.createDataFrame(
+        [(0, None), (1, [1.0, 2.0]), (2, None), (3, [-3.0, 4.0])],
+        "vec_id long, embedding array<double>").coalesce(1)
+    got = {r["vec_id"]: r["bucket"] for r in
+           similarity.hyperplane_buckets(df, nbits=8).collect()}
+    planes = np.random.default_rng(42).standard_normal((2, 8))
+    assert got == {0: None, 1: _signs_bucket([1.0, 2.0], planes), 2: None,
+                   3: _signs_bucket([-3.0, 4.0], planes)}
+
+
 def test_embedding_near_dups_fixture_guard(spark):
     """q_embedding_near_dups hash-matches an exact all-pairs oracle; that
     holds iff (a) engine pairs ⊆ exact pairs (true by construction — exact

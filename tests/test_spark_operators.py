@@ -306,6 +306,50 @@ def test_detokenize_null_row_keeps_later_rows(spark):
     assert got == ["Hi", "", "!", ""]
 
 
+def _strings_by_row_slicing(flat, offsets):
+    """The per-row decode ``flat_tokens_to_strings`` replaced: decode the
+    batch once, slice the Python string per row."""
+    import numpy as np
+    import pyarrow as pa
+
+    joined = np.ascontiguousarray(flat, dtype="<u4").tobytes().decode(
+        "utf-32-le")
+    return pa.array([joined[offsets[i]:offsets[i + 1]]
+                     for i in range(len(offsets) - 1)], type=pa.string())
+
+
+def test_flat_tokens_to_strings_matches_row_slicing():
+    """The one-pass string builder equals per-row slicing: 1- to 4-byte
+    UTF-8 codepoints (incl. non-BMP), ASCII-only batches, empty rows,
+    offsets that start past zero (a slice of the batch) and int32 or
+    strided input."""
+    import numpy as np
+
+    from hidden_characters_detector_spark.sources.synth import (
+        flat_tokens_to_strings)
+
+    rng = np.random.default_rng(7)
+    pool = [0x41, 0x7F, 0x80, 0xE9, 0x7FF, 0x800, 0x200B, 0xFEFF, 0xFFFF,
+            0x10000, 0x1F600, 0xE0100, 0x10FFFF]
+    lens = rng.integers(0, 40, 300)
+    lens[::7] = 0
+    flat = rng.choice(pool, int(lens.sum())).astype(np.int64)
+    offsets = np.concatenate([[0], np.cumsum(lens)])
+    cases = {
+        "whole": (flat, offsets),
+        "int32": (flat.astype(np.int32), offsets),
+        "sliced": (flat, offsets[17:203]),
+        "strided": (np.repeat(flat, 2)[::2], offsets),
+        "ascii": (flat % 0x80, offsets),
+        "all_empty": (flat[:0], np.zeros(4, np.int64)),
+        "no_rows": (flat[:0], np.zeros(1, np.int64)),
+    }
+    for name, (f, o) in cases.items():
+        got = flat_tokens_to_strings(f, o)
+        got.validate(full=True)
+        assert got.equals(_strings_by_row_slicing(f, o)), name
+
+
 def test_text_operators_keep_any_order(spark):
     """``keep`` listed out of schema order still lands each value in its
     own column (the output follows the schema order)."""

@@ -1004,8 +1004,8 @@ def test_single_pass_pipeline_decontam_gate(spark, tmp_path):
     _write_file(spark, [_row("g0", clean_toks, "web", _mins(0)),
                         _row("leak", leak_toks, "web", _mins(1)),
                         # contaminated AND quarantine-bad (null time):
-                        # must reach NEITHER sink — the raw quarantine
-                        # re-scan honors the gate too
+                        # must reach NEITHER sink — quarantine rows come
+                        # from the gated stream
                         ("leakbad", leak_toks, len(leak_toks), "web",
                          None),
                         # bad-but-clean: still quarantined as usual
@@ -1044,7 +1044,7 @@ def test_single_pass_pipeline_history_bloom_gate(spark, tmp_path):
     previous snapshot's Bloom filter never reach the kernel or the clean
     sink (zero false negatives by construction), the drop count surfaces
     as an observed metric, and a history row that is ALSO quarantine-bad
-    reaches neither sink (the raw quarantine re-scan honors the gate)."""
+    reaches neither sink (quarantine rows come from the gated stream)."""
     from pyspark.sql import functions as F
 
     from hidden_characters_detector_spark.operators import bloom
@@ -1125,12 +1125,136 @@ def test_sink_scheme_guard_and_file_uri_normalization(spark, tmp_path):
         write_batch_partition(df, 0, "file://otherhost/tmp/x")
 
 
-def test_source_wal_missing_entry_raises(spark, tmp_path):
-    """A batch with NO WAL entry is a parse/layout failure, not an empty
-    batch: silently returning [] would drop quarantined rows from both
-    sinks (ADVICE r4), so the resolver must refuse."""
-    with pytest.raises(FileNotFoundError, match="WAL"):
-        pipeline._source_wal_files(spark, str(tmp_path / "no-such-ck"), 0)
+def test_single_pass_pipeline_one_job_per_batch(spark, tmp_path):
+    """Each micro-batch launches exactly one Spark job of its own — the
+    kernel task that stages the sink, quarantine and density files — under
+    the job group ``<query_name>/batch=<N>``: no quarantine re-scan and no
+    density re-read."""
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    os.makedirs(src)
+    now = time.time()
+    for i in range(3):
+        _write_file(spark, [_row(f"g{i}", [A, ZWSP], "web", _mins(i)),
+                            (f"b{i}", None, 0, "web", _mins(i))],
+                    os.path.join(src, f"f{i}"), now - 300 + i)
+    q = pipeline.single_pass_pipeline(spark, src, out, str(tmp_path / "ck"),
+                                      max_files_per_trigger=1,
+                                      query_name="one-job")
+    q.awaitTermination(180)
+    assert q.exception() is None
+    tracker = spark.sparkContext.statusTracker()
+    jobs = {b: tracker.getJobIdsForGroup(f"one-job/batch={b}")
+            for b in range(3)}
+    assert all(len(ids) == 1 for ids in jobs.values()), jobs
+    assert len(pipeline.read_quarantine(spark, out).collect()) == 3
+
+
+def _plant_orphans(out):
+    """Staged files a failed task attempt or a crash before publish would
+    leave behind: well-formed, named like live ones, never collected."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    staging = os.path.join(out, "_staging")
+    os.makedirs(staging, exist_ok=True)
+    ghost = pa.table({"doc_id": ["ghost"], "n_tok": pa.array([1], pa.int32())})
+    for kind in ("cleaned", "quarantine", "density"):
+        pq.write_table(ghost, os.path.join(
+            staging, f"{kind}-00000-999999-{os.urandom(6).hex()}.parquet"))
+
+
+def test_single_pass_pipeline_publishes_only_collected_files(spark,
+                                                             tmp_path):
+    """The commit publishes exactly the files the batch's tasks reported:
+    planted orphan staged files are never published and are deleted; a
+    batch replayed after a crash between publish and checkpoint commit is
+    published once (replaced, not duplicated); a batch with no good rows
+    still leaves readable, schema-carrying sink and density directories."""
+    import json
+
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    ck = str(tmp_path / "ck")
+    os.makedirs(src)
+    now = time.time()
+    # batch 0: only bad rows; batch 1: good and bad rows
+    _write_file(spark, [("b0", None, 0, "web", _mins(0))],
+                os.path.join(src, "f0"), now - 300)
+    _write_file(spark, [_row("g0", [A, ZWSP], "web", _mins(1)),
+                        _row("g1", [QUOTE], "books", _mins(1)),
+                        ("b1", [A], 5, "web", _mins(1))],
+                os.path.join(src, "f1"), now - 200)
+
+    def run():
+        _plant_orphans(out)
+        q = pipeline.single_pass_pipeline(spark, src, out, ck,
+                                          max_files_per_trigger=1)
+        q.awaitTermination(180)
+        assert q.exception() is None
+        assert not os.path.exists(os.path.join(out, "_staging"))
+        sink = read_sink(spark, os.path.join(out, "cleaned"))
+        quar = pipeline.read_quarantine(spark, out)
+        dens = pipeline.read_density(spark, out)
+        return (sorted(r["doc_id"] for r in sink.collect()),
+                sorted(r["doc_id"] for r in quar.collect()),
+                sorted(tuple(r) for r in dens.collect()))
+
+    first = run()
+    assert first[0] == ["g0", "g1"] and first[1] == ["b0", "b1"]
+    assert sum(r[-1] for r in first[2]) == 2          # n_seq of good rows
+    empty = spark.read.parquet(os.path.join(out, "cleaned", "batch_id=0"))
+    assert empty.count() == 0 and "tokens_clean" in empty.columns
+    with open(os.path.join(out, "cleaned", "_manifest_batch_0.json")) as f:
+        assert json.load(f)["rows"] == 0
+    dens0 = spark.read.parquet(os.path.join(out, "density", "batch_id=0"))
+    assert dens0.count() == 0 and "n_detections" in dens0.columns
+
+    # crash after publishing batch 1 but before its checkpoint commit:
+    # the restart replays batch 1 with new orphans lying around
+    for name in ("1", ".1.crc"):
+        path = os.path.join(ck, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+    assert run() == first
+    with open(os.path.join(out, "cleaned", "_manifest_batch_1.json")) as f:
+        assert json.load(f)["rows"] == 2
+
+
+@pytest.mark.parametrize("window", ["1 minute", "7 seconds", "1 hour"])
+def test_single_pass_density_matches_f_window(spark, tmp_path, window):
+    """Density partials use Spark's own window assignment: the folded
+    totals equal a batch ``F.window`` aggregation, pre-epoch timestamps
+    included (a truncating modulo would put them one window late)."""
+    from hidden_characters_detector_spark.operators.clean import clean_detect
+
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    os.makedirs(src)
+    times = [dt.datetime(1960, 5, 5, 1, 2, 3, 456789),
+             dt.datetime(1969, 12, 31, 23, 59, 30),
+             dt.datetime(1969, 12, 31, 23, 59, 59, 999999),
+             dt.datetime(1970, 1, 1), dt.datetime(1970, 1, 1, 0, 0, 7),
+             _mins(0.5), _mins(61)]
+    rows = [_row(f"w{i}", [A, ZWSP] * (i + 1), ("web", "books")[i % 2], t)
+            for i, t in enumerate(times)]
+    _write_file(spark, rows, os.path.join(src, "f1"), time.time() - 300)
+    q = pipeline.single_pass_pipeline(spark, src, out, str(tmp_path / "ck"),
+                                      window=window)
+    q.awaitTermination(120)
+    got = {(r["window_start"], r["window_end"], r["source"]):
+           (r["n_detections"], r["n_hidden"], r["n_seq"])
+           for r in pipeline.read_density(spark, out).collect()}
+    batch = spark.read.schema(pipeline.TOKEN_STREAM_SCHEMA).parquet(src)
+    want = {(r["w"]["start"], r["w"]["end"], r["source"]):
+            (r["nd"], r["nh"], r["ns"])
+            for r in (clean_detect(batch)
+                      .groupBy(F.window("event_time", window).alias("w"),
+                               "source")
+                      .agg(F.sum("n_detected").alias("nd"),
+                           F.sum("n_hidden").alias("nh"),
+                           F.count("*").alias("ns"))).collect()}
+    assert got == want and len(want) >= 4
 
 
 def test_quarantine_compaction_with_sparse_batch_ids(spark, tmp_path):
