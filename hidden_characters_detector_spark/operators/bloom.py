@@ -192,29 +192,20 @@ def bloom_might_contain_py(df: DataFrame, bits: bytes,
     """
     import pyarrow as pa
 
+    from ..sources.synth import append_column, lists_to_flat_tokens
+
     if len(bits) != (m + 7) // 8:
         raise ValueError(f"bits has {len(bits)} bytes, expected "
                          f"{(m + 7) // 8} for m={m}")
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(np.frombuffer(bits, dtype=np.uint8))
+    bc = df.sparkSession.sparkContext.broadcast(
+        np.frombuffer(bits, dtype=np.uint8))
     with_pos = df.withColumn(
         "__bloom_pos", bloom_positions(key_col, m=m, k=k, salt=salt))
-    out_schema = StructType(list(df.schema.fields)
-                            + [StructField(out_col, BooleanType(), False)])
-    names = [f.name for f in df.schema.fields]
 
-    def check(batches):
-        arr = bc.value
-        for b in batches:
-            tbl = b.column(b.schema.get_field_index("__bloom_pos"))
-            v = tbl.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            hit = ((arr[v >> 3] >> (7 - (v & 7))) & 1).astype(bool)
-            ok = hit.reshape(-1, k).all(axis=1) if len(v) else \
-                np.zeros(0, dtype=bool)
-            cols = [b.column(b.schema.get_field_index(n)) for n in names]
-            yield pa.RecordBatch.from_arrays(
-                cols + [pa.array(ok)], names + [out_col])
+    def check(batch: pa.RecordBatch) -> pa.Array:
+        v, _ = lists_to_flat_tokens(batch.column("__bloom_pos"))
+        hit = ((bc.value[v >> 3] >> (7 - (v & 7))) & 1).astype(bool)
+        return pa.array(hit.reshape(-1, k).all(axis=1))
 
-    return with_pos.mapInArrow(check, out_schema)
+    return append_column(with_pos, f"{out_col} boolean not null", check,
+                         drop=("__bloom_pos",))

@@ -52,14 +52,16 @@ from __future__ import annotations
 
 import math
 from decimal import Decimal
-from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
+
+from ..sources.synth import append_column, vectors_to_matrix
 
 _ROUND = 6
 
@@ -84,56 +86,31 @@ def _rounded_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
                     lambda x: F.round(x, _ROUND)).alias("v"))
 
 
-def _assign(pts: DataFrame, centroids: np.ndarray,
-            id_field) -> DataFrame:
-    """One vectorized assignment pass: cluster = argmin_c ‖v−c‖² with
-    ties to the smaller cluster id (matches the oracle's
-    ``row_number() OVER (ORDER BY dist, cl)`` — the dim-order fold is
-    bit-identical across engines, see module docstring)."""
-    k, dim = centroids.shape
-    ddl = f"{id_field.name} {id_field.dataType.simpleString()}, " \
-          f"v array<double>, cluster int"
-    C = centroids  # (k, dim) float64, coords already 6-decimal values
+def sq_dist(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """``(n, dim)`` points × ``(k, dim)`` centroids -> ``(n, k)`` squared
+    distances accumulated dim by dim IN DIM ORDER: per (row, centroid)
+    the oracle's left fold over the zipped difference list, the same IEEE
+    multiply-add sequence, so the unrounded distances are bit-identical
+    across engines."""
+    acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
+    for j in range(C.shape[1]):
+        d = X[:, j, None] - C[None, :, j]
+        acc += d * d
+    return acc
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            col = batch.column("v")
-            # fail at the operator boundary with a clear message — a NULL
-            # or ragged vector would otherwise surface as an opaque
-            # reshape/length-mismatch error deep inside the task
-            if col.null_count:
-                raise ValueError(
-                    "kmeans_assign: NULL embedding vector in input "
-                    "(filter or impute upstream)")
-            lens = col.value_lengths().to_numpy(zero_copy_only=False)
-            if lens.size and (lens != dim).any():
-                bad = int(lens[lens != dim][0])
-                raise ValueError(
-                    f"kmeans_assign: embedding of length {bad} != "
-                    f"centroid dim {dim} (ragged input)")
-            flat_arr = col.flatten()
-            if flat_arr.null_count:
-                raise ValueError(
-                    "kmeans_assign: NULL element inside an embedding "
-                    "vector (would poison distances as NaN)")
-            flat = flat_arr.to_numpy(zero_copy_only=False)
-            X = flat.reshape(-1, dim)
-            acc = np.zeros((X.shape[0], k), dtype=np.float64)
-            # dim-by-dim accumulation == the oracle's left fold over the
-            # zipped difference list: per (row, cluster) the same IEEE
-            # multiply-add sequence in the same order, so the unrounded
-            # distances are bit-identical across engines.
-            for j in range(dim):
-                d = X[:, j, None] - C[None, :, j]
-                acc += d * d
-            cluster = np.argmin(acc, axis=1) \
-                if len(X) else np.zeros(0, dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(id_field.name), batch.column("v"),
-                 pa.array(cluster.astype(np.int32), type=pa.int32())],
-                names=[id_field.name, "v", "cluster"])
 
-    return pts.mapInArrow(run, ddl)
+def _assign(pts: DataFrame, centroids: np.ndarray) -> DataFrame:
+    """One vectorized assignment pass adding ``cluster: int`` = argmin_c
+    ‖v−c‖² with ties to the smaller cluster id (matches the oracle's
+    ``row_number() OVER (ORDER BY dist, cl)``; ``np.argmin`` takes the
+    first minimum)."""
+    def cluster(batch: pa.RecordBatch) -> pa.Array:
+        X = vectors_to_matrix(batch.column("v"), centroids.shape[1],
+                              "kmeans_assign")
+        return pa.array(np.argmin(sq_dist(X, centroids), axis=1),
+                        type=pa.int32())
+
+    return append_column(pts, "cluster int", cluster)
 
 
 def _update(assigned: DataFrame, centroids: np.ndarray) -> np.ndarray:
@@ -154,14 +131,13 @@ def _update(assigned: DataFrame, centroids: np.ndarray) -> np.ndarray:
     return out
 
 
-def _fit_local(rows: list, k: int, iters: int) -> np.ndarray:
-    """Driver-local Lloyd's over collected ``(id, v)`` rows — the SAME
-    cross-engine protocol as the distributed loop, step for step:
+def _fit_local(pts: pa.Table, k: int, iters: int) -> np.ndarray:
+    """Driver-local Lloyd's over the collected ``(id, v)`` table — the
+    SAME cross-engine protocol as the distributed loop, step for step:
 
     * init = the ``k`` vectors with the smallest ids (rank order);
-    * assignment = argmin of the dim-order-accumulated squared distance
-      (``np.argmin`` takes the first minimum — the smaller-cluster-id
-      tiebreak of :func:`_assign`);
+    * assignment = argmin of :func:`sq_dist` (``np.argmin`` takes the
+      first minimum — the smaller-cluster-id tiebreak of :func:`_assign`);
     * update = ``round(float(Σ decimal(coord)) / n, 6)`` where
       ``decimal(coord)`` quantizes the double's SHORTEST decimal
       representation to 6 places HALF_UP — exactly what Spark's
@@ -175,45 +151,20 @@ def _fit_local(rows: list, k: int, iters: int) -> np.ndarray:
     replaces the per-iteration Spark job ladder (each job paying the
     scheduler's fixed floor) with one collect.
     """
-    from decimal import Decimal
-
-    v0 = rows[0][1]
-    if v0 is None:
-        raise ValueError(
-            "kmeans_fit: NULL embedding vector in input "
-            "(filter or impute upstream)")
-    dim = len(v0)
-    ids = [r[0] for r in rows]
-    order = np.argsort(np.array(ids, dtype=object)) \
-        if isinstance(ids[0], str) else np.argsort(ids)
-    X = np.empty((len(rows), dim), dtype=np.float64)
-    for i, r in enumerate(rows):
-        v = r[1]
-        if v is None or any(x is None for x in v):
-            raise ValueError(
-                "kmeans_fit: NULL embedding vector or element in input "
-                "(filter or impute upstream)")
-        if len(v) != dim:
-            raise ValueError(
-                f"kmeans_fit: embedding of length {len(v)} != "
-                f"centroid dim {dim} (ragged input)")
-        X[i] = v
+    X = vectors_to_matrix(pts.column(1), None, "kmeans_assign")
+    order = pc.sort_indices(pts.column(0)).to_numpy()
     centroids = X[order[:k]].copy()
     # every coordinate is already a 6-decimal value (the rounded
     # projection), so its decimal(28,6) cast is exactly the integer
     # micros np.rint recovers — the sums below are the same exact
     # decimal sums _update's Spark aggregation produces
     micros = np.rint(X * 1e6).astype(np.int64)
-    if micros.size and int(np.abs(micros).max()) * len(rows) >= 1 << 62:
+    if micros.size and int(np.abs(micros).max()) * len(X) >= 1 << 62:
         raise ValueError("kmeans_fit: coordinates too large for the "
                          "exact int64 decimal sums")
     for _ in range(iters - 1):
-        k_ = centroids.shape[0]
-        acc = np.zeros((X.shape[0], k_), dtype=np.float64)
-        for j in range(dim):
-            d = X[:, j, None] - centroids[None, :, j]
-            acc += d * d
-        cluster = np.argmin(acc, axis=1)
+        k_, dim = centroids.shape
+        cluster = np.argmin(sq_dist(X, centroids), axis=1)
         counts = np.bincount(cluster, minlength=k_)
         sums = np.zeros((k_, dim), dtype=np.int64)
         np.add.at(sums, cluster, micros)
@@ -264,18 +215,19 @@ def kmeans_fit(df: DataFrame, *, vec_col: str = "embedding",
             pts = pts.persist(StorageLevel.MEMORY_AND_DISK)
             handle = pts
         try:
-            rows = pts.collect()
+            local = pts.toArrow()
             if k is None:
-                k = auto_k(len(rows),
+                k = auto_k(local.num_rows,
                            target_cluster_size=target_cluster_size)
-            if len(rows) < k:
-                raise ValueError(f"k={k} exceeds corpus size {len(rows)}")
-            centroids = _fit_local(rows, k, iters)
+            if local.num_rows < k:
+                raise ValueError(
+                    f"k={k} exceeds corpus size {local.num_rows}")
+            centroids = _fit_local(local, k, iters)
         except BaseException:
             if handle is not None:
                 handle.unpersist()
             raise
-        return _assign(pts, centroids, pts.schema[0]), centroids, handle
+        return _assign(pts, centroids), centroids, handle
     handle = None
     if materialize:
         from pyspark import StorageLevel
@@ -286,21 +238,21 @@ def kmeans_fit(df: DataFrame, *, vec_col: str = "embedding",
             if n_vectors is None:
                 n_vectors = pts.count()
             k = auto_k(n_vectors, target_cluster_size=target_cluster_size)
-        init = pts.orderBy(id_col).limit(k).collect()
-        if len(init) < k:
-            raise ValueError(f"k={k} exceeds corpus size {len(init)}")
+        init = pts.orderBy(id_col).limit(k).toArrow()
+        if init.num_rows < k:
+            raise ValueError(f"k={k} exceeds corpus size {init.num_rows}")
+        centroids = vectors_to_matrix(init.column("v"), None,
+                                      "kmeans_assign")
     except BaseException:
         # don't leak a session-lifetime cache the caller never got a
         # handle to (the module's own cache-lifetime contract)
         if handle is not None:
             handle.unpersist()
         raise
-    centroids = np.array([r["v"] for r in init], dtype=np.float64)
-    id_field = pts.schema[0]
-    assigned = _assign(pts, centroids, id_field)
+    assigned = _assign(pts, centroids)
     for _ in range(iters - 1):
         centroids = _update(assigned, centroids)
-        assigned = _assign(pts, centroids, id_field)
+        assigned = _assign(pts, centroids)
     return assigned, centroids, handle
 
 

@@ -28,7 +28,7 @@ one broadcast probe.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -90,6 +90,43 @@ def token_shingle_hashes(df: DataFrame, tokens_col: str = "tokens",
         lambda c: _rolling_hashes(*lists_to_flat_tokens(c), k))
 
 
+def _eval_hash_set(hashes: DataFrame) -> np.ndarray:
+    """Sorted distinct int64 ``shingle_hash`` values of an eval-side hash
+    relation.  Deduplicated on the driver (``np.unique`` sorts): the
+    relation is benchmark-sized by design, and skipping a ``.distinct()``
+    saves its exchange stage inside the eval-build job."""
+    return np.unique(hashes.select("shingle_hash").toArrow()
+                     .column(0).to_numpy())
+
+
+def _eval_probe(bc) -> Callable[[np.ndarray], np.ndarray]:
+    """Membership mask of int64 hashes in the broadcast sorted eval set
+    ``bc`` (:func:`_eval_hash_set`).  A one-byte prefilter table on the
+    hash low bits (≥8× the eval count, power of two, built once per task
+    on first use) resolves most probes with ONE table read instead of a
+    log2(|eval|)-step binary search; survivors (true hits + the ≤1/8
+    false-positive slots) are confirmed exactly by ``searchsorted``."""
+    tbl = None
+
+    def probe(h: np.ndarray) -> np.ndarray:
+        nonlocal tbl
+        ev = bc.value
+        hit = np.zeros(h.size, dtype=bool)
+        if not (h.size and ev.size):
+            return hit
+        if tbl is None:
+            tbl = np.zeros(1 << max(16, int(ev.size * 8 - 1).bit_length()),
+                           dtype=np.uint8)
+            tbl[ev & (tbl.size - 1)] = 1
+        cpos = np.flatnonzero(tbl[h & (tbl.size - 1)])
+        sub = h[cpos]
+        idx = np.minimum(np.searchsorted(ev, sub), ev.size - 1)
+        hit[cpos[ev[idx] == sub]] = True
+        return hit
+
+    return probe
+
+
 def build_eval_filter(spark, eval_df: DataFrame, *,
                       tokens_col: str = "tokens", id_col: str = "doc_id",
                       k: int = 20):
@@ -104,10 +141,8 @@ def build_eval_filter(spark, eval_df: DataFrame, *,
     static DataFrame would re-plan per micro-batch and a stream-stream
     join would need watermarks the static eval set doesn't have.
     """
-    rows = (token_shingle_hashes(eval_df, tokens_col, id_col, k=k)
-            .select("shingle_hash").distinct().toPandas())
-    hashes = np.sort(rows["shingle_hash"].to_numpy(dtype=np.int64))
-    return spark.sparkContext.broadcast(hashes)
+    return spark.sparkContext.broadcast(_eval_hash_set(
+        token_shingle_hashes(eval_df, tokens_col, id_col, k=k)))
 
 
 def mark_contaminated(df: DataFrame, eval_hashes, *,
@@ -116,27 +151,18 @@ def mark_contaminated(df: DataFrame, eval_hashes, *,
     """Append ``contaminated: boolean`` — True iff the row's token array
     shares any ``k``-gram hash with the broadcast eval set
     (:func:`build_eval_filter`).  Pure stateless ``mapInArrow`` (one
-    rolling-hash pass + a vectorized sorted-membership probe per batch),
-    so it drops into batch AND streaming plans unchanged — the streaming
-    ingestion guard that keeps leaked benchmark items out of the clean
-    sink at the door."""
+    rolling-hash pass + :func:`_eval_probe` per batch), so it drops into
+    batch AND streaming plans unchanged — the streaming ingestion guard
+    that keeps leaked benchmark items out of the clean sink at the door."""
+    probe = _eval_probe(eval_hashes)
+
     def flags(batch: pa.RecordBatch) -> pa.Array:
-        ev = eval_hashes.value
         h, hoff = _rolling_hashes(
             *lists_to_flat_tokens(batch.column(tokens_col)), k)
-        hits = np.zeros(h.shape[0], dtype=bool)
-        if h.size and ev.size:
-            idx = np.searchsorted(ev, h.astype(np.int64))
-            idx = np.minimum(idx, ev.size - 1)
-            hits = ev[idx] == h.astype(np.int64)
-        lens = np.diff(hoff)
-        out = np.zeros(lens.shape[0], dtype=bool)
-        if hits.any():
-            row = np.repeat(np.arange(lens.shape[0], dtype=np.int64), lens)
-            np.logical_or.at(out, row[hits], True)
-        return pa.array(out, type=pa.bool_())
+        hits = np.flatnonzero(probe(h.view(np.int64)))
+        return pa.array(np.diff(np.searchsorted(hits, hoff)) > 0)
 
-    return append_column(df, "contaminated", "boolean", flags)
+    return append_column(df, "contaminated boolean", flags)
 
 
 def contamination_report(train: DataFrame, eval_df: DataFrame, *,
@@ -151,7 +177,7 @@ def contamination_report(train: DataFrame, eval_df: DataFrame, *,
     set — correct whenever the eval side is benchmark-sized — and fuses
     the membership probe INTO the train-side shingle kernel: the hit
     count per document is computed against the sorted broadcast array in
-    the same vectorized pass that produces the distinct shingles, so the
+    the same vectorized pass that produces the shingles, so the
     per-(doc, shingle) fan-out — ~one row per corpus character — is
     never materialized through the Arrow boundary or a join at all; only
     ``(id, n_hits)`` rows for HIT documents leave the kernel (identical
@@ -160,73 +186,35 @@ def contamination_report(train: DataFrame, eval_df: DataFrame, *,
     shuffle semi-join for an unusually large eval corpus.
     """
     if broadcast_eval:
-        # dedupe driver-side (np.unique sorts): the relation is
-        # benchmark-sized by design, and skipping the .distinct() saves
-        # its exchange stage inside the eval-build job
-        rows = (doc_shingle_hashes(eval_df, text_col, id_col, k=k)
-                .select("shingle_hash").toPandas())
-        ev = np.unique(rows["shingle_hash"].to_numpy(dtype=np.int64))
-        bc = train.sparkSession.sparkContext.broadcast(ev)
+        probe = _eval_probe(train.sparkSession.sparkContext.broadcast(
+            _eval_hash_set(doc_shingle_hashes(eval_df, text_col, id_col,
+                                              k=k))))
         slim = train.select(id_col, text_col)
         id_type = slim.schema[id_col].dataType.simpleString()
-        ddl = f"{id_col} {id_type}, n_hits bigint"
 
         def run(batches: Iterator[pa.RecordBatch]
                 ) -> Iterator[pa.RecordBatch]:
-            evv = bc.value
-            # one-byte prefilter table on the hash low bits (≥8× the
-            # eval count, power of two): most probes resolve with ONE
-            # table read instead of a log2(|eval|)-step binary search;
-            # survivors (true hits + the ≤1/8 false-positive slots) are
-            # confirmed exactly by searchsorted — identical hit set
-            tbl = None
-            tmask = np.int64(0)
-            if evv.size:
-                tsize = 1 << max(16, int(evv.size * 8 - 1).bit_length())
-                tmask = np.int64(tsize - 1)
-                tbl = np.zeros(tsize, dtype=np.uint8)
-                tbl[evv & tmask] = 1
             for batch in batches:
                 h, off = _flat_shingle_hashes(batch.column(text_col), k)
-                sh = h.astype(np.int64)
+                sh = h.view(np.int64)
                 # probe FIRST (duplicates included — a hash hits for all
-                # or none of its repeats), then dedupe (row, hash) among
-                # the HIT positions only: the per-doc distinct lexsort
-                # runs over the leak sliver, not the whole corpus'
-                # shingle stream
-                hit = np.zeros(sh.size, dtype=bool)
-                if sh.size and evv.size:
-                    cand = tbl[sh & tmask] == 1
-                    cpos = np.nonzero(cand)[0]
-                    if cpos.size:
-                        sub = sh[cpos]
-                        idx = np.minimum(np.searchsorted(evv, sub),
-                                         evv.size - 1)
-                        hit[cpos[evv[idx] == sub]] = True
-                lens = np.diff(off)
-                nrows = lens.shape[0]
-                counts = np.zeros(nrows, dtype=np.int64)
-                if hit.any():
-                    row = np.repeat(np.arange(nrows, dtype=np.int64),
-                                    lens)[hit]
-                    hh = sh[hit]
-                    order = np.lexsort((hh, row))
-                    r, v = row[order], hh[order]
-                    keep = np.ones(r.size, dtype=bool)
-                    keep[1:] = (v[1:] != v[:-1]) | (r[1:] != r[:-1])
-                    counts = np.bincount(r[keep], minlength=nrows)
-                nz = np.nonzero(counts)[0]
-                ids = batch.column(id_col).take(
-                    pa.array(nz, type=pa.int64()))
+                # or none of its repeats), then dedupe per doc among the
+                # HIT positions only: the segment-wise distinct runs over
+                # the leak sliver, not the whole corpus' shingle stream
+                hits = np.flatnonzero(probe(sh))
+                _, uoff = _unique_per_doc(sh[hits],
+                                          np.searchsorted(hits, off))
+                counts = np.diff(uoff)
+                nz = np.flatnonzero(counts)
                 yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array(counts[nz].astype(np.int64),
-                                   type=pa.int64())],
+                    [batch.column(id_col).take(pa.array(nz)),
+                     pa.array(counts[nz], type=pa.int64())],
                     names=[id_col, "n_hits"])
 
         # one tiny aggregation over HIT docs only: merges rows of a doc
         # split across batches (and duplicate-id inputs) exactly like the
         # relational groupBy did
-        return (slim.mapInArrow(run, ddl)
+        return (slim.mapInArrow(run, f"{id_col} {id_type}, n_hits bigint")
                 .groupBy(id_col)
                 .agg(F.sum("n_hits").cast("long").alias("n_hits")))
     th = doc_shingle_hashes(train, text_col, id_col, k=k)

@@ -35,33 +35,12 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.synth import append_column, strings_to_flat_tokens
+from ..sources.synth import (append_column, matrix_to_vectors,
+                             strings_to_flat_tokens)
 
 _M61 = np.uint64((1 << 61) - 1)
 _HASH_BASE = np.uint64(1099511628211)
 _U64_MAX = np.iinfo(np.uint64).max
-
-
-def _shingle_hashes(texts: list[str], k: int = 5) -> list[np.ndarray]:
-    """Per-doc arrays of DISTINCT 64-bit k-shingle hashes (char shingles).
-
-    Reference implementation (per-doc), kept ONLY for parity tests — the
-    batch hot paths (:func:`_minhash_batch`, :func:`simhash_fingerprints`,
-    :func:`_pairwise_jaccard`) all use :func:`_flat_shingle_hashes`.
-    """
-    out = []
-    for t in texts:
-        cps = np.frombuffer(t.encode("utf-32-le"), dtype="<u4").astype(
-            np.uint64)
-        if cps.size < k:
-            out.append(np.zeros(0, dtype=np.uint64))
-            continue
-        n = cps.size - k + 1
-        acc = np.zeros(n, dtype=np.uint64)
-        for j in range(k):  # k is a small constant (5)
-            acc = acc * _HASH_BASE + cps[j:j + n]
-        out.append(np.unique(acc))
-    return out
 
 
 def _flat_shingle_hashes(texts: pa.Array, k: int
@@ -178,12 +157,10 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", *,
     a = rng.integers(1, int(_M61), num_perm, dtype=np.uint64)
     b = rng.integers(0, int(_M61), num_perm, dtype=np.uint64)
     def signatures(batch: pa.RecordBatch) -> pa.Array:
-        sigs = _minhash_batch(batch.column(text_col), a, b, shingle_k)
-        return pa.FixedSizeListArray.from_arrays(
-            pa.array(sigs.astype(np.int64).ravel(), type=pa.int64()),
-            num_perm).cast(pa.list_(pa.int64()))
+        return matrix_to_vectors(_minhash_batch(
+            batch.column(text_col), a, b, shingle_k).astype(np.int64))
 
-    return append_column(df, "minhash", "array<bigint>", signatures)
+    return append_column(df, "minhash array<bigint>", signatures)
 
 
 def _lsh_candidates(df: DataFrame, id_col: str, text_col: str, *,
@@ -301,7 +278,7 @@ def simhash_fingerprints(df: DataFrame, text_col: str = "text", *,
         return pa.array(fps.astype(np.int64), type=pa.int64(),
                         mask=~nonempty)
 
-    return append_column(df, "simhash", "bigint", fingerprints)
+    return append_column(df, "simhash bigint", fingerprints)
 
 
 def simhash_near_dups(df: DataFrame, id_col: str = "doc_id", *,
@@ -516,7 +493,7 @@ def ngram_jaccard(df_pairs: DataFrame, *, k: int = 5) -> DataFrame:
     construction (runs only on LSH bucket-collision candidates) and batch
     vectorized (:func:`_pairwise_jaccard` — one flat rolling-hash pass per
     column + one lexsort, no per-pair Python)."""
-    return append_column(df_pairs, "jaccard", "double", lambda b: pa.array(
+    return append_column(df_pairs, "jaccard double", lambda b: pa.array(
         _pairwise_jaccard(b.column("text_a"), b.column("text_b"), k),
         type=pa.float64()))
 

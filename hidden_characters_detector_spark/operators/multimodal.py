@@ -25,7 +25,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.synth import append_column
+from ..sources.synth import append_column, matrix_to_vectors
 
 MEDIA_META_DDL = ("media_meta struct<kind:string, width:int, height:int, "
                   "sample_rate:int, n_frames:int>")
@@ -127,13 +127,6 @@ def _pil_features(blobs: list, out_dim: int, Image) -> np.ndarray:
     return feats
 
 
-def _vector_rows(feats: np.ndarray) -> pa.Array:
-    """(rows, dim) float64 matrix -> Arrow ``list<double>`` rows."""
-    return pa.FixedSizeListArray.from_arrays(
-        pa.array(feats.ravel(), type=pa.float64()), feats.shape[1]
-    ).cast(pa.list_(pa.float64()))
-
-
 def decode_images(df: DataFrame, *, out_dim: int = 8,
                   deterministic_fake: bool = False,
                   media_col: str = "media") -> DataFrame:
@@ -162,9 +155,9 @@ def decode_images(df: DataFrame, *, out_dim: int = 8,
                 "image codec not available (PIL not importable); "
                 "install pillow for real decode or pass "
                 "deterministic_fake=True for the plumbing path")
-        return _vector_rows(feats)
+        return matrix_to_vectors(feats)
 
-    return append_column(df, "img_features", "array<double>", features)
+    return append_column(df, "img_features array<double>", features)
 
 
 def sample_frames(df: DataFrame, *, every_n: int = 24,
@@ -228,7 +221,7 @@ def resample_audio(df: DataFrame, *, target_rate: int = 16000,
                           for s in segs])
             norm = float(np.sqrt((v * v).sum())) or 1.0
             feats[i] = v / norm
-        return _vector_rows(feats)
+        return matrix_to_vectors(feats)
 
-    return append_column(df, "audio_features", "array<double>", features) \
+    return append_column(df, "audio_features array<double>", features) \
         .withColumn("resampled_rate", F.lit(target_rate))

@@ -22,7 +22,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.synth import append_column, lists_to_flat_tokens
+from ..sources.synth import append_column, vectors_to_matrix
 
 
 def _dot(col_a, col_b):
@@ -52,16 +52,14 @@ def _bucket_array(col: pa.Array, nbits: int, dim: int | None,
                   get_planes) -> pa.Array:
     """Sign-LSH bucket per vector of one Arrow batch; NULL for a NULL
     vector."""
-    valid = col.is_valid().to_numpy(zero_copy_only=False)
-    flat, offsets = lists_to_flat_tokens(col)
-    lengths = np.diff(offsets)[valid]
-    d = int(lengths[0]) if lengths.size else (dim or 0)
-    mat = flat.astype(np.float64).reshape(lengths.size, d)
-    signs = (mat @ get_planes(d)) > 0
+    valid = col.is_valid()
+    mat = vectors_to_matrix(col.filter(valid), dim, "hyperplane_buckets")
+    signs = (mat @ get_planes(mat.shape[1])) > 0
     bucket = np.zeros(len(col), np.int64)
-    bucket[valid] = (signs.astype(np.int64)
-                     << np.arange(nbits, dtype=np.int64)).sum(axis=1)
-    return pa.array(bucket, type=pa.int32(), mask=~valid)
+    mask = valid.to_numpy(zero_copy_only=False)
+    bucket[mask] = (signs.astype(np.int64)
+                    << np.arange(nbits, dtype=np.int64)).sum(axis=1)
+    return pa.array(bucket, type=pa.int32(), mask=~mask)
 
 
 def hyperplane_buckets(df: DataFrame, *, vec_col: str = "embedding",
@@ -82,7 +80,7 @@ def hyperplane_buckets(df: DataFrame, *, vec_col: str = "embedding",
                 (d, nbits))
         return planes[d]
 
-    return append_column(df, "bucket", "int", lambda batch: _bucket_array(
+    return append_column(df, "bucket int", lambda batch: _bucket_array(
         batch.column(vec_col), nbits, dim, get_planes))
 
 
@@ -119,14 +117,13 @@ def rank_ivf_lists(centroids: np.ndarray, query: Sequence[float],
     across engines (exact distance ties break to the smaller list id,
     also in both).  Driver-side O(k·dim) numpy — the centroid table is
     the tiny half of an IVF index."""
+    from .clustering import sq_dist
+
     q = np.asarray(list(query), dtype=np.float64)
     k, dim = centroids.shape
     if q.size != dim:
         raise ValueError(f"query dim {q.size} != centroid dim {dim}")
-    acc = np.zeros(k, dtype=np.float64)
-    for j in range(dim):
-        d = q[j] - centroids[:, j]
-        acc += d * d
+    acc = sq_dist(q[None, :], centroids)[0]
     order = sorted(range(k), key=lambda c: (acc[c], c))
     return order[:max(0, min(nprobe, k))]
 
@@ -206,7 +203,7 @@ def ivf_probe_lists(queries: DataFrame, centroids: np.ndarray, *,
     list id.  Emits ``nprobe`` rows per query: ``(id, qv, cluster)`` with
     ``qv`` the 6-decimal-rounded query vector (the quantizer's coordinate
     protocol, so downstream cosine folds are cross-engine exact)."""
-    from .clustering import _rounded_vectors
+    from .clustering import _rounded_vectors, sq_dist
 
     k, dim = centroids.shape
     if not 1 <= nprobe:
@@ -216,40 +213,35 @@ def ivf_probe_lists(queries: DataFrame, centroids: np.ndarray, *,
     id_field = pts.schema[0]
     ddl = (f"{id_field.name} {id_field.dataType.simpleString()}, "
            f"qv array<double>, cluster int")
-    C = centroids
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             col = batch.column("v")
-            if col.null_count or col.flatten().null_count:
-                raise ValueError(
-                    "ivf_probe_lists: NULL query vector or element")
-            lens = col.value_lengths().to_numpy(zero_copy_only=False)
-            if lens.size and (lens != dim).any():
-                bad = int(lens[lens != dim][0])
-                raise ValueError(
-                    f"ivf_probe_lists: query of length {bad} != "
-                    f"centroid dim {dim}")
-            X = col.flatten().to_numpy(
-                zero_copy_only=False).reshape(-1, dim)
-            nq = X.shape[0]
-            acc = np.zeros((nq, k), dtype=np.float64)
-            for j in range(dim):
-                d = X[:, j, None] - C[None, :, j]
-                acc += d * d
+            X = vectors_to_matrix(col, dim, "ivf_probe_lists")
             # stable sort: exact distance ties keep index (= cluster id)
             # order, mirroring the oracle's (dist, cl) window order
-            probe = np.argsort(acc, axis=1, kind="stable")[:, :nprobe] \
-                if nq else np.zeros((0, nprobe), dtype=np.int64)
-            idx = np.repeat(np.arange(nq), nprobe)
+            probe = np.argsort(sq_dist(X, centroids), axis=1,
+                               kind="stable")[:, :nprobe]
+            idx = pa.array(np.repeat(np.arange(len(X)), nprobe))
             yield pa.RecordBatch.from_arrays(
-                [batch.column(id_field.name).take(pa.array(idx)),
-                 col.take(pa.array(idx)),
+                [batch.column(id_field.name).take(idx), col.take(idx),
                  pa.array(probe.reshape(-1).astype(np.int32),
                           type=pa.int32())],
                 names=[id_field.name, "qv", "cluster"])
 
     return pts.mapInArrow(run, ddl)
+
+
+def _dots(batch: pa.RecordBatch) -> pa.Array:
+    """Per-row dot product of the ``qv`` and ``v`` vectors, accumulated
+    ``acc += q_j·v_j`` for j ascending from 0.0 — the identical IEEE
+    multiply-add sequence as the JVM/DuckDB left fold."""
+    Q = vectors_to_matrix(batch.column("qv"), None, "ivf_batch_topk")
+    V = vectors_to_matrix(batch.column("v"), Q.shape[1], "ivf_batch_topk")
+    acc = np.zeros(Q.shape[0], dtype=np.float64)
+    for j in range(Q.shape[1]):
+        acc += Q[:, j] * V[:, j]
+    return pa.array(acc, type=pa.float64())
 
 
 def ivf_batch_topk(corpus: DataFrame, queries: DataFrame, *,
@@ -303,41 +295,10 @@ def ivf_batch_topk(corpus: DataFrame, queries: DataFrame, *,
             .select(query_id, corpus_id, "qv", "v",
                     (F.col("_nq") * F.col("_nv")).alias("_denom")))
     # the per-candidate dot product is the one O(pairs × dim) fold left:
-    # run it as a vectorized Arrow pass instead of the interpreted
-    # zip_with/aggregate lambda chain — the numpy dim-order accumulation
-    # (acc += q_j·v_j, j ascending, from 0.0) performs the identical
-    # IEEE multiply-add sequence as the JVM left fold, so every cosine
-    # bit is unchanged (and the oracle's list_reduce still matches)
-    qf = cand.schema[query_id]
-    cf = cand.schema[corpus_id]
-    ddl = (f"{qf.name} {qf.dataType.simpleString()}, "
-           f"{cf.name} {cf.dataType.simpleString()}, "
-           "_dot double, _denom double")
-
-    def dots(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            qcol, vcol = b.column("qv"), b.column("v")
-            dim = int(qcol.value_lengths()[0].as_py())
-            Q = qcol.flatten().to_numpy(
-                zero_copy_only=False).reshape(-1, dim)
-            vflat = vcol.flatten().to_numpy(zero_copy_only=False)
-            if vflat.size != Q.size:
-                raise ValueError(
-                    "ivf_batch_topk: corpus vector dim != query dim "
-                    "(ragged candidate batch)")
-            V = vflat.reshape(-1, dim)
-            acc = np.zeros(Q.shape[0], dtype=np.float64)
-            for j in range(dim):
-                acc += Q[:, j] * V[:, j]
-            yield pa.RecordBatch.from_arrays(
-                [b.column(qf.name), b.column(cf.name),
-                 pa.array(acc, type=pa.float64()),
-                 b.column("_denom")],
-                names=[qf.name, cf.name, "_dot", "_denom"])
-
-    scored0 = cand.mapInArrow(dots, ddl)
+    # run it as a vectorized Arrow pass (:func:`_dots`, the same fold, so
+    # every cosine bit is unchanged) instead of the interpreted
+    # zip_with/aggregate lambda chain
+    scored0 = append_column(cand, "_dot double", _dots, drop=("qv", "v"))
     cos = F.when(F.col("_denom") > 0,
                  F.round(F.col("_dot") / F.col("_denom"), 6))
     scored = (scored0.select(query_id, corpus_id, cos.alias("cosine"))

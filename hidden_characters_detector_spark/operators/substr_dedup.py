@@ -96,7 +96,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..sources.synth import (flat_tokens_to_strings, lists_to_flat_tokens,
+from ..sources.synth import (append_column, flat_tokens_to_strings,
+                             list_offsets, lists_to_flat_tokens,
                              strings_to_flat_tokens)
 from .dedup import _rolling_hashes
 
@@ -332,50 +333,39 @@ def remove_duplicated_spans(df: DataFrame, text_col: str = "text",
                    F.struct("span_start", "span_end"))).alias("_spans")))
     if broadcast_spans:
         per_doc = F.broadcast(per_doc)
-    names = [f.name for f in df.schema.fields]
-    # the join reorders columns (join key first) — pin the kernel's view
-    joined = df.join(per_doc, id_col, "left").select(*names, "_spans")
-    ddl = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"{out_col} string"])
+    # the join reorders columns (join key first) — keep df's column order
+    joined = df.join(per_doc, id_col, "left").select(*df.columns, "_spans")
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            texts = batch.column(text_col)
-            flat, off = strings_to_flat_tokens(texts)
-            sp = batch.column(len(names))  # _spans: list<struct<s,e>>
-            sp_lens = sp.value_lengths().fill_null(0).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            flat_sp = sp.flatten()
-            starts = flat_sp.field("span_start").to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            ends = flat_sp.field("span_end").to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            row_of_span = np.repeat(np.arange(sp_lens.shape[0],
-                                              dtype=np.int64), sp_lens)
-            doc_start = off[:-1][row_of_span]
-            doc_len = np.diff(off)[row_of_span]
-            # clip foreign spans to the document (spans built here are
-            # always in range; clipping keeps caller-supplied spans safe)
-            gs = doc_start + np.clip(starts, 0, doc_len)
-            ge = np.maximum(doc_start + np.clip(ends, 0, doc_len), gs)
-            delta = np.zeros(flat.shape[0] + 1, dtype=np.int64)
-            np.add.at(delta, gs, 1)
-            np.add.at(delta, ge, -1)
-            keep = np.cumsum(delta[:-1]) == 0
-            # per-row kept counts from the mask itself (robust to
-            # overlapping caller-supplied spans, where summing span
-            # lengths would double-count)
-            nrows = off.shape[0] - 1
-            row_of_char = np.repeat(np.arange(nrows, dtype=np.int64),
-                                    np.diff(off))
-            kept_per_row = np.bincount(row_of_char[keep],
-                                       minlength=nrows).astype(np.int64)
-            new_off = np.concatenate(
-                [[0], np.cumsum(kept_per_row, dtype=np.int64)])
-            out = flat_tokens_to_strings(flat[keep], new_off)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(len(names))] + [out],
-                names=names + [out_col])
+    def rebuild(batch: pa.RecordBatch) -> pa.Array:
+        flat, off = strings_to_flat_tokens(batch.column(text_col))
+        sp = batch.column("_spans")  # list<struct<span_start, span_end>>
+        flat_sp = sp.flatten()
+        starts = flat_sp.field("span_start").to_numpy(
+            zero_copy_only=False).astype(np.int64)
+        ends = flat_sp.field("span_end").to_numpy(
+            zero_copy_only=False).astype(np.int64)
+        row_of_span = np.repeat(np.arange(len(sp), dtype=np.int64),
+                                np.diff(list_offsets(sp)))
+        doc_start = off[:-1][row_of_span]
+        doc_len = np.diff(off)[row_of_span]
+        # clip foreign spans to the document (spans built here are always
+        # in range; clipping keeps caller-supplied spans safe)
+        gs = doc_start + np.clip(starts, 0, doc_len)
+        ge = np.maximum(doc_start + np.clip(ends, 0, doc_len), gs)
+        delta = np.zeros(flat.shape[0] + 1, dtype=np.int64)
+        np.add.at(delta, gs, 1)
+        np.add.at(delta, ge, -1)
+        keep = np.cumsum(delta[:-1]) == 0
+        # per-row kept counts from the mask itself (robust to overlapping
+        # caller-supplied spans, where summing span lengths would
+        # double-count)
+        nrows = off.shape[0] - 1
+        row_of_char = np.repeat(np.arange(nrows, dtype=np.int64),
+                                np.diff(off))
+        kept_per_row = np.bincount(row_of_char[keep], minlength=nrows)
+        new_off = np.concatenate(
+            [[0], np.cumsum(kept_per_row, dtype=np.int64)])
+        return flat_tokens_to_strings(flat[keep], new_off)
 
-    return joined.mapInArrow(run, ddl)
+    return append_column(joined, f"{out_col} string", rebuild,
+                         drop=("_spans",))

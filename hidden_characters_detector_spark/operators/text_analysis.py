@@ -590,31 +590,23 @@ def fingerprints(df: DataFrame, text_col: str = "text",
       neither problem.  Docs shorter than ``window`` fall back to
       whole-content xxhash64 via ``coalesce``.
     """
-    import pyarrow as pa
     import numpy as np
+    import pyarrow as pa
 
+    from ..sources.synth import append_column
     from .dedup import _flat_shingle_hashes
 
-    slim = df.select(id_col, text_col)
-    ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}"
-                     for f in slim.schema.fields] + ["_fp_min bigint"])
-    names = [f.name for f in slim.schema.fields]
+    def shingle_min(batch: pa.RecordBatch) -> pa.Array:
+        h, off = _flat_shingle_hashes(batch.column(text_col), window)
+        lens = np.diff(off)
+        ne = lens > 0
+        vals = np.zeros(lens.shape[0], dtype=np.uint64)
+        if h.size:
+            vals[ne] = np.minimum.reduceat(h, off[:-1][ne])
+        return pa.array(vals.astype(np.int64), type=pa.int64(), mask=~ne)
 
-    def run(batches):
-        for batch in batches:
-            h, off = _flat_shingle_hashes(batch.column(text_col), window)
-            lens = np.diff(off)
-            ne = lens > 0
-            vals = np.zeros(lens.shape[0], dtype=np.uint64)
-            if h.size:
-                vals[ne] = np.minimum.reduceat(h, off[:-1][ne])
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in names]
-                + [pa.array(vals.astype(np.int64), type=pa.int64(),
-                            mask=~ne)],
-                names=names + ["_fp_min"])
-
-    inner = slim.mapInArrow(run, ddl)
+    inner = append_column(df.select(id_col, text_col), "_fp_min bigint",
+                          shingle_min)
     c = F.col(text_col)
     return inner.select(
         id_col,

@@ -29,6 +29,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # every marker family is represented (SURVEY.md §2.2 families + dead rules)
 INJECT_POOL = np.array(
@@ -108,21 +109,25 @@ def flat_tokens_to_strings(flat: np.ndarray, offsets: np.ndarray) -> pa.Array:
         pa.py_buffer(data))
 
 
-def lists_to_flat_tokens(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Arrow ``list<int32>`` array -> (flat values, offsets int64).
-
-    Slice- and NULL-safe: NULL lists count as empty (``flatten()`` skips
-    null slots, so filling their lengths with 0 keeps offsets aligned with
-    the values).  The values are the native int32 buffer, not a copy.
-    """
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
+def list_offsets(col: pa.Array) -> np.ndarray:
+    """Row offsets (int64, R+1) into ``col.flatten()`` for an Arrow list
+    array of any value type.  Slice- and NULL-safe: NULL lists count as
+    empty (``flatten()`` skips null slots, so filling their lengths with 0
+    keeps offsets aligned with the values)."""
     lengths = col.value_lengths()
     if lengths.null_count:
         lengths = pc.fill_null(lengths, 0)
-    offsets = np.concatenate([[0], np.cumsum(
+    return np.concatenate([[0], np.cumsum(
         lengths.to_numpy(zero_copy_only=False), dtype=np.int64)])
-    return col.flatten().to_numpy(zero_copy_only=False), offsets
+
+
+def lists_to_flat_tokens(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Arrow ``list<int32>`` array -> (flat values, offsets int64); NULL
+    lists count as empty.  The values are the native int32 buffer, not a
+    copy."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    return col.flatten().to_numpy(zero_copy_only=False), list_offsets(col)
 
 
 def flat_tokens_to_lists(values: np.ndarray, offsets: np.ndarray,
@@ -135,16 +140,62 @@ def flat_tokens_to_lists(values: np.ndarray, offsets: np.ndarray,
         mask=None if mask is None else pa.array(mask))
 
 
-def append_column(df: DataFrame, name: str, type_ddl: str,
-                  fn: Callable[[pa.RecordBatch], pa.Array]) -> DataFrame:
-    """``df`` plus the column ``name`` of Spark type ``type_ddl``, computed
-    from each Arrow batch by ``fn`` in one ``mapInArrow`` pass."""
+def vectors_to_matrix(col: pa.Array, dim: int | None, op: str
+                      ) -> np.ndarray:
+    """Arrow ``list<double>`` array -> ``(rows, dim)`` float64 matrix, one
+    fixed-length vector per row (``dim=None``: the first row's length).
+
+    A NULL vector, a NULL element or a row of another length raises a
+    ``ValueError`` naming ``op``: reshaping a ragged batch would silently
+    pair the wrong coordinates, and a NULL element would poison every
+    distance as NaN."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if col.null_count:
+        raise ValueError(
+            f"{op}: NULL vector in input (filter or impute upstream)")
+    values = col.flatten()
+    if values.null_count:
+        raise ValueError(f"{op}: NULL element inside a vector "
+                         "(filter or impute upstream)")
+    lens = np.diff(list_offsets(col))
+    if dim is None:
+        dim = int(lens[0]) if lens.size else 0
+    if (lens != dim).any():
+        raise ValueError(f"{op}: vector of length {int(lens[lens != dim][0])}"
+                         f" != dim {dim} (ragged input)")
+    return values.to_numpy(zero_copy_only=False).astype(
+        np.float64, copy=False).reshape(lens.size, dim)
+
+
+def matrix_to_vectors(mat: np.ndarray) -> pa.ListArray:
+    """``(rows, dim)`` numpy matrix -> Arrow list rows of its dtype (the
+    inverse of :func:`vectors_to_matrix`)."""
+    return pa.FixedSizeListArray.from_arrays(
+        pa.array(mat.ravel()), mat.shape[1]).cast(
+            pa.list_(pa.from_numpy_dtype(mat.dtype)))
+
+
+def append_column(df: DataFrame, fields: str,
+                  fn: Callable[[pa.RecordBatch], pa.Array | list[pa.Array]],
+                  *, drop: tuple[str, ...] = ()) -> DataFrame:
+    """``df`` without its ``drop`` columns, plus the new columns ``fields``
+    (a Spark DDL field list, e.g. ``"tokens array<int>, n_tok int"``)
+    computed from each Arrow batch by ``fn`` in one ``mapInArrow`` pass.
+    ``fn`` returns one array per new field (a bare array for one field);
+    the kept input columns pass through untouched."""
+    keep = [f.name for f in df.schema.fields if f.name not in drop]
     ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}"
-                     for f in df.schema.fields] + [f"{name} {type_ddl}"])
+                     for f in df.schema.fields if f.name in keep] + [fields])
+    names = keep + StructType.fromDDL(fields).fieldNames()
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            yield batch.append_column(name, fn(batch))
+            new = fn(batch)
+            if isinstance(new, (pa.Array, pa.ChunkedArray)):
+                new = [new]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep] + list(new), names)
 
     return df.mapInArrow(run, ddl)
 

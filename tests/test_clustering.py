@@ -193,3 +193,67 @@ def test_kmeans_local_fit_matches_distributed(spark):
     assert (c_loc == c_dist).all()          # exact, not approximate
     assert sorted(map(tuple, a_loc.collect())) == \
         sorted(map(tuple, a_dist.collect()))
+
+
+# ------------------------------------------------- vector decode error paths
+
+_GOOD = [(i, [float(i % 3), float(i // 3)]) for i in range(6)]
+_DEFECTS = {
+    "null_vector": (None, "NULL vector"),
+    "null_element": ([1.0, None], "NULL element"),
+    "ragged": ([1.0, 2.0, 3.0], "vector of length"),
+}
+
+
+def _run_kmeans_local(spark, df):
+    assigned, _ = clustering.kmeans_assign(df, k=2, materialize=False)
+    assigned.collect()
+
+
+def _run_kmeans_distributed(spark, df):
+    assigned, _, _ = clustering.kmeans_fit(
+        df, k=2, iters=2, materialize=False, local_fit_max_vectors=0)
+    assigned.collect()
+
+
+def _run_ivf_probe(spark, df):
+    from hidden_characters_detector_spark.operators import similarity
+
+    similarity.ivf_probe_lists(
+        df.withColumnRenamed("vec_id", "query_id"),
+        np.array([[0.0, 0.0], [2.0, 1.0]]), nprobe=1).collect()
+
+
+@pytest.mark.parametrize("bad_id", [-1, 9], ids=["first", "last"])
+@pytest.mark.parametrize("defect", sorted(_DEFECTS))
+@pytest.mark.parametrize("run,op", [
+    (_run_kmeans_local, "kmeans_assign"),
+    (_run_kmeans_distributed, "kmeans_assign"),
+    (_run_ivf_probe, "ivf_probe_lists")],
+    ids=["kmeans_local", "kmeans_distributed", "ivf_probe_lists"])
+def test_vector_decode_rejects_bad_vectors(spark, run, op, defect,
+                                          bad_id):
+    """A NULL vector, a NULL element or a wrong length fails with a
+    ValueError naming the operator: on the driver (the local fit, and the
+    distributed init when the bad row has the smallest id) and inside a
+    task (where Spark wraps it in a PythonException)."""
+    bad_vec, message = _DEFECTS[defect]
+    df = spark.createDataFrame(_GOOD + [(bad_id, bad_vec)],
+                               "vec_id long, embedding array<double>")
+    with pytest.raises(Exception) as err:
+        run(spark, df)
+    text = str(err.value)
+    assert isinstance(err.value, ValueError) or "ValueError" in text
+    assert f"{op}: {message}" in text
+
+
+def test_ivf_dot_pass_empty_batch():
+    """An empty candidate batch yields an empty ``_dot`` column."""
+    import pyarrow as pa
+
+    from hidden_characters_detector_spark.operators import similarity
+
+    vecs = pa.array([], type=pa.list_(pa.float64()))
+    batch = pa.RecordBatch.from_arrays([vecs, vecs], ["qv", "v"])
+    out = similarity._dots(batch)
+    assert out.type == pa.float64() and len(out) == 0

@@ -14,6 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hidden_characters_detector_spark.operators import dedup
+from shingle_reference import shingle_hashes
 
 # arbitrary unicode minus surrogates (not encodable to UTF-32 text)
 _text = st.text(
@@ -26,7 +27,7 @@ _texts = st.lists(_text, min_size=1, max_size=8)
 def test_flat_shingle_hashes_match_per_doc(texts, k):
     flat, offsets = dedup._flat_shingle_hashes(
         pa.array(texts, type=pa.string()), k)
-    per_doc = dedup._shingle_hashes(texts, k)
+    per_doc = shingle_hashes(texts, k)
     assert offsets.shape[0] == len(texts) + 1
     for i, expect in enumerate(per_doc):
         got = np.unique(flat[offsets[i]:offsets[i + 1]])
@@ -51,8 +52,8 @@ def test_pairwise_jaccard_properties(texts, k):
     ba = dedup._pairwise_jaccard(brr, arr, k)
     assert np.allclose(ab, ba)
     assert ((ab >= 0.0) & (ab <= 1.0)).all()
-    ha = dedup._shingle_hashes(texts, k)
-    hb = dedup._shingle_hashes(rot, k)
+    ha = shingle_hashes(texts, k)
+    hb = shingle_hashes(rot, k)
     expect = np.array([
         (np.intersect1d(x, y).size / np.union1d(x, y).size)
         if x.size and y.size else 0.0

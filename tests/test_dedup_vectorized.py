@@ -8,6 +8,7 @@ import pyarrow as pa
 import pytest
 
 from hidden_characters_detector_spark.operators import dedup
+from shingle_reference import shingle_hashes
 
 TEXTS = [
     "the quick brown fox jumps over the lazy dog",
@@ -24,7 +25,7 @@ TEXTS = [
 
 def _old_minhash(texts, a, b, k):
     rows = []
-    for h in dedup._shingle_hashes(texts, k):
+    for h in shingle_hashes(texts, k):
         if h.size == 0:
             rows.append(np.full(a.shape[0], np.iinfo(np.uint64).max,
                                 dtype=np.uint64))
@@ -36,7 +37,7 @@ def _old_minhash(texts, a, b, k):
 
 def _old_simhash(texts, k):
     fps = np.zeros(len(texts), dtype=np.uint64)
-    for i, h in enumerate(dedup._shingle_hashes(texts, k)):
+    for i, h in enumerate(shingle_hashes(texts, k)):
         if h.size == 0:
             continue
         bits = ((h[:, None] >> np.arange(64, dtype=np.uint64)[None, :])
@@ -51,7 +52,7 @@ def _old_simhash(texts, k):
 def test_flat_shingles_match_per_doc(k):
     arr = pa.array(TEXTS, type=pa.string())
     flat, offsets = dedup._flat_shingle_hashes(arr, k)
-    per_doc = dedup._shingle_hashes(TEXTS, k)  # distinct + sorted
+    per_doc = shingle_hashes(TEXTS, k)  # distinct + sorted
     assert len(offsets) == len(TEXTS) + 1
     for i, expect in enumerate(per_doc):
         got = np.unique(flat[offsets[i]:offsets[i + 1]])
@@ -93,8 +94,8 @@ def test_simhash_batch_matches_per_doc(k):
 def _old_pairwise_jaccard(texts_a, texts_b, k):
     """The pre-vectorization per-pair loop (round-2 ngram_jaccard verify
     stage), kept as the parity reference."""
-    ha = dedup._shingle_hashes(texts_a, k)
-    hb = dedup._shingle_hashes(texts_b, k)
+    ha = shingle_hashes(texts_a, k)
+    hb = shingle_hashes(texts_b, k)
     return np.array([
         (np.intersect1d(x, y).size / np.union1d(x, y).size)
         if x.size and y.size else 0.0

@@ -331,6 +331,22 @@ def test_hyperplane_buckets_null_vector(rows):
                    for r in rows]
 
 
+def test_hyperplane_buckets_rejects_ragged_batch():
+    """A vector of another length raises instead of being re-sliced: the
+    batch [[1,-2],[3],[-4,5,-6]] once came out as the buckets of
+    [[1,-2],[3,-4],[5,-6]]."""
+    import pyarrow as pa
+
+    def planes(d):
+        return np.random.default_rng(42).standard_normal((d, 16))
+
+    col = pa.array([[1.0, -2.0], [3.0], [-4.0, 5.0, -6.0]],
+                   type=pa.list_(pa.float64()))
+    with pytest.raises(ValueError,
+                       match="hyperplane_buckets: vector of length 1"):
+        similarity._bucket_array(col, 16, None, planes)
+
+
 def test_hyperplane_buckets_null_vector_spark(spark):
     df = spark.createDataFrame(
         [(0, None), (1, [1.0, 2.0]), (2, None), (3, [-3.0, 4.0])],
