@@ -57,6 +57,10 @@ _ACTION_NAMES = pa.array(
     type=pa.string())
 _DESCRIPTIONS = pa.array(kernel.DESC_STRINGS, type=pa.string())
 
+# tokens per kernel call: ~40 MB of kernel temporaries, and at 2^20 tokens
+# the per-call overhead is already lost in the per-token cost
+KERNEL_SLICE_TOKENS = 1 << 20
+
 
 def _decode(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """Text or token-list column -> (flat codepoints, row offsets)."""
@@ -124,28 +128,56 @@ def output_ddl(df: DataFrame, passthrough: list[str],
         + [f"{n} {_COL_TYPES[n]}" for n in out_cols])
 
 
+def _row_slices(offsets: np.ndarray, budget: int
+               ) -> Iterator[tuple[int, int]]:
+    """Consecutive row ranges ``[start, stop)`` covering every row (one
+    empty range for a batch without rows), each holding at most ``budget``
+    tokens; a row longer than ``budget`` forms a range of its own."""
+    nrows, start = len(offsets) - 1, 0
+    while True:
+        stop = int(np.searchsorted(offsets, offsets[start] + budget,
+                                   "right")) - 1
+        stop = min(max(stop, start + 1), nrows)
+        yield start, stop
+        if stop >= nrows:
+            return
+        start = stop
+
+
 def kernel_batches(in_col: str, cfg: DetectorConfig, passthrough: list[str],
                    out_cols: list[str], *, events: bool = False):
     """The one body of every clean-family operator, as a ``mapInArrow``
     function: decode ``in_col``, run the kernel, emit the passthrough
     columns (fanned out per event when ``events``) followed by
-    ``out_cols``."""
+    ``out_cols``.
+
+    The kernel runs over row slices of at most :data:`KERNEL_SLICE_TOKENS`
+    tokens (read when the body is built, so it travels with the pickled
+    function), one output batch per slice: its temporaries peak at ~39
+    bytes per token, which a whole ``maxRecordsPerBatch`` batch would
+    multiply."""
     build = _event_arrays if events else _row_arrays
+    budget = KERNEL_SLICE_TOKENS
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             toks, offsets = _decode(batch.column(in_col))
-            res = kernel.clean_flat(toks, offsets, cfg, emit_events=events)
-            kept = [batch.column(c) for c in passthrough]
-            if events:
-                counts = np.diff(res.ev_offsets)
-                take = pa.array(np.repeat(np.arange(len(counts)), counts),
-                                type=pa.int64())
-                kept = [c.take(take) for c in kept]
-            cols = build(offsets, res)
-            yield pa.RecordBatch.from_arrays(
-                kept + [cols[n]() for n in out_cols],
-                names=passthrough + out_cols)
+            for start, stop in _row_slices(offsets, budget):
+                rows = batch.slice(start, stop - start)
+                offs = offsets[start:stop + 1] - offsets[start]
+                res = kernel.clean_flat(
+                    toks[offsets[start]:offsets[stop]], offs, cfg,
+                    emit_events=events)
+                kept = [rows.column(c) for c in passthrough]
+                if events:
+                    counts = np.diff(res.ev_offsets)
+                    take = pa.array(np.repeat(np.arange(len(counts)), counts),
+                                    type=pa.int64())
+                    kept = [c.take(take) for c in kept]
+                cols = build(offs, res)
+                yield pa.RecordBatch.from_arrays(
+                    kept + [cols[n]() for n in out_cols],
+                    names=passthrough + out_cols)
 
     return run
 

@@ -267,9 +267,10 @@ _RECORD_SCHEMA = pa.schema(list(STAGED_SCHEMA)
                            + [(c, pa.int64()) for c in _COUNTS])
 
 
-def _density_partials(good: pa.Table) -> pa.Table:
-    """Per-(window, source) sums of a task's good rows.  A row without an
-    event time has no window (``F.window`` drops it too)."""
+def _density_partials(good: pa.Table, acc: pa.Table | None) -> pa.Table:
+    """Per-(window, source) sums of one output batch's good rows, folded
+    into ``acc`` (the sums of the task's earlier batches, or None).  A row
+    without an event time has no window (``F.window`` drops it too)."""
     good = good.filter(pc.is_valid(good.column("event_time")))
     w = good.column(_WINDOW)
     keys = ["window_start", "window_end", "source"]
@@ -279,10 +280,23 @@ def _density_partials(good: pa.Table) -> pa.Table:
          good.column("source"), good.column("n_detected").cast(pa.int64()),
          good.column("n_hidden").cast(pa.int64()),
          pa.array(np.ones(good.num_rows, np.int64))], names=keys + sums)
+    if acc is not None:
+        parts = pa.concat_tables([acc, parts])
     return (parts.group_by(keys, use_threads=False)
             .aggregate([(c, "sum") for c in sums])
             .select(keys + [f"{c}_sum" for c in sums])
             .rename_columns(keys + sums))
+
+
+def _task_slots(spark: SparkSession) -> int:
+    """How many tasks the scheduler runs at once: the default resource
+    profile's slots over the executors registered now, or
+    ``defaultParallelism`` while none are (it is often set above the slot
+    count, so it is only the fallback)."""
+    sc = spark.sparkContext._jsc.sc()
+    slots = sc.maxNumConcurrentTasks(
+        sc.resourceProfileManager().defaultResourceProfile())
+    return slots or spark.sparkContext.defaultParallelism
 
 
 def single_pass_pipeline(spark: SparkSession, input_path: str, out_dir: str,
@@ -296,10 +310,14 @@ def single_pass_pipeline(spark: SparkSession, input_path: str, out_dir: str,
                          history_bloom: tuple[bytes, int, int] | None = None,
                          query_name: str = "hcd-pipeline"):
     """The full reference dataflow as ONE streaming query and ONE Spark
-    job per micro-batch.
+    job per micro-batch, run as one wave of at most one task per slot.
 
-    Each partition of the batch runs one ``mapInArrow`` task that runs the
-    clean kernel once over its rows (:func:`..operators.clean
+    The gated stream is coalesced to the session's task slots
+    (:func:`_task_slots`, read when the query starts): every Python task
+    pays a fixed start-up cost, so a batch whose file scan plans more
+    partitions than there are slots would pay it again in a second wave.
+    Each task runs the ``mapInArrow`` body that runs the clean kernel once
+    over its rows (:func:`..operators.clean
     .kernel_batches`) and stages, with pyarrow, uniquely named Parquet files
     under ``<out>/_staging``: the good rows' cleaned output, the bad rows
     verbatim with their reason, and the per-(window, source) density
@@ -359,7 +377,7 @@ def single_pass_pipeline(spark: SparkSession, input_path: str, out_dir: str,
         tc = TaskContext.get()
         batch_id = int(tc.getLocalProperty(BATCH_ID_PROPERTY))
         files = {k: StagedFile(staging, k) for k in outputs}
-        good, counts = [], np.zeros(len(_COUNTS), np.int64)
+        density, counts = None, np.zeros(len(_COUNTS), np.int64)
         for out in run_kernel(batches):
             t = pa.Table.from_batches([out])
             bad = pc.is_valid(t.column(QUARANTINE_REASON_COL))
@@ -377,10 +395,11 @@ def single_pass_pipeline(spark: SparkSession, input_path: str, out_dir: str,
                     "partition_id", pa.array(
                         np.full(t.num_rows, tc.partitionId(), np.int32))),
                 batch_id))
-            good.append(t.select([_WINDOW, "event_time", "source",
-                                  "n_detected", "n_hidden"]))
-        if good:
-            files["density"].write(_density_partials(pa.concat_tables(good)))
+            density = _density_partials(
+                t.select([_WINDOW, "event_time", "source", "n_detected",
+                          "n_hidden"]), density)
+        if density is not None:
+            files["density"].write(density)
         recs = [r for f in files.values() for r in f.record()]
         if counts[0]:
             recs.append(dict(zip(_COUNTS, counts.tolist())))
@@ -389,7 +408,8 @@ def single_pass_pipeline(spark: SparkSession, input_path: str, out_dir: str,
     # observe() folds the tasks' counts into the batch's own execution and
     # surfaces them in every progress event (the reference's ScanStats +
     # throughput telemetry, ref :926-948) at no extra pass
-    staged = tok.mapInArrow(stage, _RECORD_DDL).observe(
+    staged = tok.coalesce(_task_slots(spark)).mapInArrow(
+        stage, _RECORD_DDL).observe(
         "clean_metrics", F.coalesce(F.sum("n_seq"), F.lit(0)).alias("n_seq"),
         *[F.sum(c).alias(c) for c in ("n_detected", "n_seq_with_markers",
                                       "n_quarantined")])

@@ -1150,6 +1150,39 @@ def test_single_pass_pipeline_one_job_per_batch(spark, tmp_path):
     assert len(pipeline.read_quarantine(spark, out).collect()) == 3
 
 
+def test_single_pass_pipeline_one_wave_per_batch(spark, tmp_path):
+    """A batch whose file scan plans more partitions than the session has
+    task slots still runs as one stage of at most one task per slot: each
+    Python task pays a fixed start-up cost, which a second wave repeats."""
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    os.makedirs(src)
+    now = time.time()
+    n_files = 9
+    for i in range(n_files):
+        _write_file(spark, [_row(f"g{i}", [A, ZWSP], "web", _mins(i))],
+                    os.path.join(src, f"f{i}"), now - 300 + i)
+    jsc = spark.sparkContext._jsc.sc()
+    slots = jsc.maxNumConcurrentTasks(
+        jsc.resourceProfileManager().defaultResourceProfile())
+    planned = (spark.read.schema(pipeline.TOKEN_STREAM_SCHEMA).parquet(src)
+               .rdd.getNumPartitions())
+    assert planned > slots, (planned, slots)
+    q = pipeline.single_pass_pipeline(spark, src, out, str(tmp_path / "ck"),
+                                      query_name="one-wave")
+    q.awaitTermination(180)
+    assert q.exception() is None
+    tracker = spark.sparkContext.statusTracker()
+    (job,) = tracker.getJobIdsForGroup("one-wave/batch=0")
+    stages = [tracker.getStageInfo(s)
+              for s in tracker.getJobInfo(job).stageIds]
+    assert len(stages) == 1 and stages[0].numTasks <= slots, \
+        [(s.stageId, s.numTasks) for s in stages]
+    sink = read_sink(spark, os.path.join(out, "cleaned"))
+    assert sorted(r["doc_id"] for r in sink.collect()) == \
+        [f"g{i}" for i in range(n_files)]
+
+
 def _plant_orphans(out):
     """Staged files a failed task attempt or a crash before publish would
     leave behind: well-formed, named like live ones, never collected."""
@@ -1255,6 +1288,53 @@ def test_single_pass_density_matches_f_window(spark, tmp_path, window):
                            F.sum("n_hidden").alias("nh"),
                            F.count("*").alias("ns"))).collect()}
     assert got == want and len(want) >= 4
+
+
+def test_single_pass_density_folds_across_arrow_batches(spark, tmp_path):
+    """A task that receives several Arrow batches folds their density
+    partials as it goes: its one density file holds one row per (window,
+    source), and the totals still equal a batch ``F.window`` aggregation.
+    The rows of each (window, source) are spread over several batches."""
+    import pyarrow.parquet as pq
+
+    from hidden_characters_detector_spark.operators.clean import clean_detect
+
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    os.makedirs(src)
+    rows = [_row(f"r{i}", [A, ZWSP] * (i % 3 + 1), ("web", "books")[i % 2],
+                 _mins(i % 4 // 2 + 0.25))
+            for i in range(13)]
+    rows.append(("late", _toks([QUOTE]), 1, "web", None))  # quarantined
+    _write_file(spark, rows, os.path.join(src, "f1"), time.time() - 300)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        q = pipeline.single_pass_pipeline(spark, src, out,
+                                          str(tmp_path / "ck"))
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(key, old)
+    assert q.exception() is None
+    dens_dir = os.path.join(out, "density", "batch_id=0")
+    (name,) = [f for f in os.listdir(dens_dir) if f.endswith(".parquet")]
+    staged = pq.read_table(os.path.join(dens_dir, name)).to_pylist()
+    keys = [(r["window_start"], r["source"]) for r in staged]
+    assert len(keys) == len(set(keys)) == 4
+    got = {(r["window_start"], r["source"]):
+           (r["n_detections"], r["n_hidden"], r["n_seq"])
+           for r in pipeline.read_density(spark, out).collect()}
+    batch = spark.read.schema(pipeline.TOKEN_STREAM_SCHEMA).parquet(src)
+    want = {(r["w"]["start"], r["source"]): (r["nd"], r["nh"], r["ns"])
+            for r in (clean_detect(batch)
+                      .groupBy(F.window("event_time", "1 minute").alias("w"),
+                               "source")
+                      .agg(F.sum("n_detected").alias("nd"),
+                           F.sum("n_hidden").alias("nh"),
+                           F.count("*").alias("ns"))
+                      .where(F.col("w").isNotNull())).collect()}
+    assert got == want and sum(v[2] for v in got.values()) == 13
 
 
 def test_quarantine_compaction_with_sparse_batch_ids(spark, tmp_path):
