@@ -145,16 +145,22 @@ def test_family_counts_sum_to_detected():
                 == res.n_detected).all()
 
 
+OUT_OF_RANGE = [-1, 0x110000, 0x110000 + 0x200B, 2**31 - 1]
+
+
 @pytest.mark.parametrize("seed", range(4))
 def test_sparse_core_equals_dense(seed):
     """The memory-lean sparse kernel == the dense reference on
-    newline-heavy random corpora (both event and non-event paths)."""
+    newline-heavy random corpora (both event and non-event paths), in both
+    token dtypes; tokens outside the codepoint range pass through
+    unchanged and report nothing."""
     rng = random.Random(1000 + seed)
     rows = []
     for _ in range(60):
         n = rng.randint(0, 80)
         rows.append([
             rng.choice(MARKER_POOL) if rng.random() < 0.3
+            else rng.choice(OUT_OF_RANGE) if rng.random() < 0.03
             else (0x0A if rng.random() < 0.15 else rng.choice(BASE_POOL))
             for _ in range(n)])
     lengths = [len(r) for r in rows]
@@ -162,16 +168,24 @@ def test_sparse_core_equals_dense(seed):
     for ln in lengths:
         offsets.append(offsets[-1] + ln)
     import numpy as np
-    flat = np.array([t for r in rows for t in r], dtype=np.int64)
     off = np.array(offsets, dtype=np.int64)
-    for cfg in (DetectorConfig(), DetectorConfig(clean=False),
-                DetectorConfig(check_ivs=False),
-                DetectorConfig(excluded=frozenset({0x200B}))):
-        a = kernel.clean_flat(flat, off, cfg, emit_events=True)
-        b = clean_flat_dense(flat, off, cfg, emit_events=True)
-        assert a.out_tokens.tolist() == b.out_tokens.tolist()
-        assert a.out_offsets.tolist() == b.out_offsets.tolist()
-        for f in ("n_detected", "n_processed", "had_marker", "n_hidden",
-                  "n_ivs", "n_typo", "ev_offsets", "ev_line_no", "ev_idx",
-                  "ev_token", "ev_type", "ev_action"):
-            assert getattr(a, f).tolist() == getattr(b, f).tolist(), f
+    for dtype in (np.int64, np.int32):
+        flat = np.array([t for r in rows for t in r], dtype=dtype)
+        n_bad = np.isin(flat, OUT_OF_RANGE).sum()
+        assert n_bad
+        for cfg in (DetectorConfig(), DetectorConfig(clean=False),
+                    DetectorConfig(check_ivs=False),
+                    DetectorConfig(check_typographic=False),
+                    DetectorConfig(exclude_word_chars=True),
+                    DetectorConfig(excluded=frozenset({0x200B})),
+                    DetectorConfig(excluded=frozenset({0x200B, 0x110000}))):
+            a = kernel.clean_flat(flat, off, cfg, emit_events=True)
+            b = clean_flat_dense(flat, off, cfg, emit_events=True)
+            assert a.out_tokens.tolist() == b.out_tokens.tolist()
+            assert a.out_offsets.tolist() == b.out_offsets.tolist()
+            for f in ("n_detected", "n_processed", "had_marker", "n_hidden",
+                      "n_ivs", "n_typo", "ev_offsets", "ev_line_no",
+                      "ev_idx", "ev_token", "ev_type", "ev_action"):
+                assert getattr(a, f).tolist() == getattr(b, f).tolist(), f
+            assert np.isin(a.out_tokens, OUT_OF_RANGE).sum() == n_bad
+            assert not np.isin(a.ev_token, OUT_OF_RANGE).any()
