@@ -9,19 +9,25 @@ every predicate is a single vectorized gather/compare. No per-row Python.
 
 Design (SURVEY.md §7.5):
 
-* classification is a one-gather LUT (``uint8[0x110000]``) instead of set
-  membership — hidden / IVS / typographic resolved in O(1) per token;
-* line structure (the reference processes files line by line; line number
-  and in-line index feed the BOM and VS16 rules, the per-line ``processed``
-  quirk and the event positions) is computed **sparsely**, at marker and
-  newline positions only: for marker-free spans the kernel touches each
-  token twice (classify gather + output copy);
-* temporaries stay int32/int8/bool where possible, which roughly halves
-  memory traffic, the binding resource on slow-memory hosts;
-* 1→N replacement expansion is a cumsum of per-token output lengths followed
-  by at most ``MAX_REPLACEMENT_LEN`` masked scatters (replacements are ≤3
-  codepoints, :func:`scatter_replacements`), so cleaned rows can be longer
-  than inputs without any loop over rows;
+* classification is one gather through a per-config class LUT
+  (``uint8[0x110000]``, :func:`_class_lut`): families the config turns off
+  and its excluded codepoints are zeroed, and in clean mode typographic
+  markers with a live replacement get their own class.  Both end entries
+  are 0, so a clipped gather also maps out-of-range tokens to "no marker";
+* everything else is computed **sparsely**, at marker (~4% of tokens) and
+  newline positions only: each marker's row and line (the reference
+  processes files line by line; line number and in-line index feed the BOM
+  and VS16 rules, the per-line ``processed`` quirk and the event
+  positions), the per-row counts (one bincount over row × class), and the
+  output offsets (an exclusive cumsum of each changed marker's output
+  length minus one);
+* the cleaned stream is the input with the changed markers deleted and the
+  replacement values inserted (one ``np.delete``, one ``np.insert``); the
+  values come from :func:`scatter_replacements`, the one 1→N expansion
+  (replacements are ≤3 codepoints), so cleaned rows can be longer than
+  inputs without any loop over rows.  The dense passes are the gather, the
+  marker and newline ``flatnonzero`` and that rebuild: ~13 bytes of
+  temporaries per int32 token;
 * the per-file count quirk (``processed`` counts *all* reports on a changed
   line, ref :750-753) is reproduced by grouping reports by line start.
 
@@ -33,6 +39,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import lru_cache
 
 import numpy as np
 
@@ -157,6 +164,30 @@ class DetectorConfig:
 
 FULL_CLEAN = DetectorConfig()
 
+# clean-mode class of a typographic marker with a live replacement
+_TYPE_REPLACED = 4
+# event action of each marker class, in detect mode and in clean mode
+_ACTIONS = np.array(
+    [[0] + [ACT_DETECTED] * 4,
+     [0, ACT_REMOVED, ACT_REMOVED, ACT_DETECTED, ACT_REPLACED]], dtype=np.int8)
+
+
+@lru_cache(maxsize=16)
+def _class_lut(cfg: DetectorConfig) -> np.ndarray:
+    """``CLASS_LUT`` with the families ``cfg`` turns off and its excluded
+    codepoints zeroed and, in clean mode, replaced typographic markers as
+    ``_TYPE_REPLACED``.  Both end entries are 0, so clipping maps
+    out-of-range tokens and excluded values onto "no marker"."""
+    lut = CLASS_LUT.copy()
+    if not cfg.check_ivs:
+        lut[lut == TYPE_IVS] = 0
+    if not cfg.check_typographic:
+        lut[lut == TYPE_TYPOGRAPHIC] = 0
+    lut.put(cfg.excluded_array(), 0, mode="clip")
+    if cfg.clean:
+        lut[(lut == TYPE_TYPOGRAPHIC) & (REPL_LEN_LUT > 0)] = _TYPE_REPLACED
+    return lut
+
 
 def parse_excluded_chars(vals: list[str] | tuple[str, ...]) -> frozenset[int]:
     """CLI ``--exclude-char`` strings -> excluded codepoints.
@@ -239,185 +270,61 @@ def clean_flat(toks: np.ndarray, offsets: np.ndarray,
     if toks.dtype not in (np.int32, np.int64):
         toks = toks.astype(np.int64)
     offsets = np.asarray(offsets, dtype=np.int64)
-    n = int(toks.shape[0])
-    nrows = int(offsets.shape[0]) - 1
-    lengths = np.diff(offsets)
+    nrows = offsets.shape[0] - 1
 
-    if n == 0:
-        z = np.zeros(nrows, dtype=np.int64)
-        return KernelResult(
-            toks, offsets, z.copy(), z.copy(), np.zeros(nrows, dtype=bool),
-            n_hidden=z.copy(), n_ivs=z.copy(), n_typo=z.copy(),
-            ev_offsets=np.zeros(nrows + 1, dtype=np.int64),
-            ev_line_no=z[:0], ev_idx=z[:0], ev_token=z[:0],
-            ev_type=np.zeros(0, np.int8), ev_action=np.zeros(0, np.int8))
+    # the only dense passes: class gather, marker and newline positions,
+    # and (clean) the output compaction + insertion
+    cls = _class_lut(cfg).take(toks, mode="clip")
+    mpos = np.flatnonzero(cls)
+    nl = np.flatnonzero(toks == markers.NEWLINE)
+    mrow = np.searchsorted(offsets, mpos, side="right") - 1
+    mtok = toks[mpos]
+    at_start = offsets[mrow] == mpos
+    # BOM = U+FEFF at row start (line 1, idx 0; ref :675), unreported in
+    # detect mode (:677); VS16 after an emoji base in the same line is kept
+    # (ref :664-671; inert when the emoji library is absent)
+    is_bom = at_start & (mtok == markers.BOM)
+    keep = ~((is_bom & (not cfg.clean)) | (
+        (mtok == markers.VS16) & ~at_start
+        & np.isin(toks[mpos - 1], EMOJI_BASE_ARR)))
+    mpos, mrow, mtok, is_bom = (a[keep] for a in (mpos, mrow, mtok, is_bom))
+    mcls = cls[mpos]
 
-    # classification gather; guard the LUT index only if out-of-range values
-    # actually occur (rare) to avoid an n-sized copy on the hot path
-    if int(toks.min()) < 0 or int(toks.max()) >= _UNICODE_MAX:
-        safe = np.clip(toks, 0, _UNICODE_MAX - 1)
-        safe[(toks < 0) | (toks >= _UNICODE_MAX)] = 0
-    else:
-        safe = toks
-    cls = CLASS_LUT[safe]
+    # per-row count of each class 0-4
+    cnt = np.bincount(mrow * 5 + mcls, minlength=5 * nrows).reshape(nrows, 5)
+    n_detected = cnt.sum(axis=1)
 
-    ex_arr = cfg.excluded_array()
-    not_excluded = ~np.isin(toks, ex_arr) if ex_arr.size else None
+    # line of each marker: newlines before it, past its row start
+    k = np.searchsorted(nl, mpos)
+    line_start = np.maximum(offsets[mrow], np.concatenate(([0], nl + 1))[k])
+    # a changed line counts all its reports as processed (ref :750-753)
+    chg = (mcls != TYPE_TYPOGRAPHIC) & cfg.clean
+    n_processed = np.bincount(mrow[np.isin(line_start, line_start[chg])],
+                              minlength=nrows)
 
-    row_starts = offsets[:-1]  # length nrows (may point past end for empty)
-
-    hidden = cls == TYPE_HIDDEN
-    if not_excluded is not None:
-        hidden &= not_excluded
-
-    # VS16 emoji-context keep rule (ref :664-671): inert when the emoji
-    # library is absent.  idx>0 within the line == previous token exists in
-    # the same line (not a row start, previous token not a newline).
-    if EMOJI_BASE_ARR.size:
-        cand = np.nonzero((toks == markers.VS16) & hidden)[0]
-        if cand.size:
-            at_start = np.isin(cand, row_starts[lengths > 0])
-            prev_ok = np.zeros(cand.size, dtype=bool)
-            nz = ~at_start
-            prev_ok[nz] = (toks[cand[nz] - 1] != markers.NEWLINE) & \
-                np.isin(toks[cand[nz] - 1], EMOJI_BASE_ARR)
-            hidden[cand[prev_ok]] = False
-
-    # BOM = U+FEFF at row start (line 1, idx 0; ref :675)
-    bom_pos = row_starts[(lengths > 0)]
-    bom_pos = bom_pos[(toks[bom_pos] == markers.BOM) & hidden[bom_pos]]
-
-    ivs = (cls == TYPE_IVS) if cfg.check_ivs else None
-    typo = (cls == TYPE_TYPOGRAPHIC) if cfg.check_typographic else None
-    if not_excluded is not None:
-        if ivs is not None:
-            ivs &= not_excluded
-        if typo is not None:
-            typo &= not_excluded
-
-    rlen = REPL_LEN_LUT[safe] if (typo is not None and cfg.clean) else None
-    typo_replace = (typo & (rlen > 0)) if rlen is not None else None
-
-    # report mask (reuse `hidden`'s buffer pattern: build once)
-    report = hidden.copy()
-    if ivs is not None:
-        report |= ivs
-    if typo is not None:
-        report |= typo
-    if not cfg.clean:
-        report[bom_pos] = False  # lead BOM unreported in detect mode (:677)
-
-    # ---- per-row counts (bincount over event rows only — sparse) ----------
-    rep_pos = np.nonzero(report)[0]
-    rep_row = (np.searchsorted(offsets, rep_pos, side="right") - 1)
-    n_detected = np.bincount(rep_row, minlength=nrows)
-    had_marker = n_detected > 0
-    hpos = rep_pos[hidden[rep_pos]]
-    n_hidden = np.bincount(
-        np.searchsorted(offsets, hpos, side="right") - 1, minlength=nrows)
-    if ivs is not None:
-        ipos = rep_pos[ivs[rep_pos]]
-        n_ivs = np.bincount(
-            np.searchsorted(offsets, ipos, side="right") - 1,
-            minlength=nrows)
-    else:
-        n_ivs = np.zeros(nrows, dtype=np.int64)
-    if typo is not None:
-        tpos = rep_pos[typo[rep_pos]]
-        n_typo = np.bincount(
-            np.searchsorted(offsets, tpos, side="right") - 1,
-            minlength=nrows)
-    else:
-        n_typo = np.zeros(nrows, dtype=np.int64)
-
-    # ---- sparse line attribution for event/report positions ---------------
-    nl_pos = np.nonzero(toks == markers.NEWLINE)[0]
-
-    def line_of(positions, rows):
-        """(line_start, line_no) for sparse positions; all O(k log m)."""
-        rs = offsets[rows]
-        if nl_pos.size == 0:
-            return rs, np.ones(positions.shape[0], dtype=np.int64)
-        p = np.searchsorted(nl_pos, positions)
-        prev_nl1 = np.where(p > 0, nl_pos[np.maximum(p - 1, 0)] + 1, 0)
-        line_start = np.maximum(rs, prev_nl1)
-        p_rs = np.searchsorted(nl_pos, rs)
-        line_no = 1 + (p - p_rs)
-        return line_start, line_no
-
-    # ---- n_processed: the changed-line quirk (ref :750-753) ---------------
+    # each changed marker's output length minus one shifts what follows it
+    rep = mcls == _TYPE_REPLACED
+    rlen = REPL_LEN_LUT[mtok].astype(np.int64) * rep
+    before = np.searchsorted(mpos, offsets)
+    shift = np.concatenate(([0], np.cumsum(rlen - chg)))
+    out = toks
     if cfg.clean:
-        # changed positions = removals (hidden|ivs) + live replacements
-        chg = hidden.copy()
-        if ivs is not None:
-            chg |= ivs
-        if typo_replace is not None:
-            chg |= typo_replace
-        if nl_pos.size == 0:
-            # single-line rows: processed = n_detected on changed rows
-            cpos = np.nonzero(chg)[0]
-            crow = np.searchsorted(offsets, cpos, side="right") - 1
-            row_chg = np.zeros(nrows, dtype=bool)
-            row_chg[crow] = True
-            n_processed = np.where(row_chg, n_detected, 0).astype(np.int64)
-        else:
-            # group report positions by their line_start; a line counts all
-            # its reports iff it has >= 1 changed position
-            ls_rep, _ = line_of(rep_pos, rep_row)
-            cpos = np.nonzero(chg)[0]
-            crow = np.searchsorted(offsets, cpos, side="right") - 1
-            ls_chg, _ = line_of(cpos, crow)
-            changed_lines = np.unique(ls_chg)
-            on_changed = np.isin(ls_rep, changed_lines)
-            n_processed = np.bincount(rep_row[on_changed],
-                                      minlength=nrows).astype(np.int64)
-    else:
-        chg = None
-        n_processed = np.zeros(nrows, dtype=np.int64)
+        lens = rlen[rep]
+        vals = np.empty(int(lens.sum()), dtype=toks.dtype)
+        scatter_replacements(vals, np.cumsum(lens) - lens, mtok[rep])
+        at = (mpos - np.cumsum(chg) + chg)[rep]  # index among kept tokens
+        out = np.insert(np.delete(toks, mpos[chg]), np.repeat(at, lens), vals)
 
-    # ---- output rebuild (clean) or passthrough (detect) --------------------
-    if cfg.clean:
-        out_len = np.ones(n, dtype=np.int32)
-        out_len[chg] = 0  # removals + replacements zeroed, then fix repls
-        if typo_replace is not None:
-            out_len[typo_replace] = rlen[typo_replace]
-        cum = np.empty(n + 1, dtype=np.int64)
-        cum[0] = 0
-        np.cumsum(out_len, dtype=np.int64, out=cum[1:])
-        out_offsets = cum[offsets]
-        out = np.empty(int(cum[-1]), dtype=toks.dtype)
-        plain = out_len == 1
-        if typo_replace is not None:
-            plain &= ~typo_replace
-        out[cum[:-1][plain]] = toks[plain]
-        if typo_replace is not None:
-            rp = np.nonzero(typo_replace)[0]
-            scatter_replacements(out, cum[rp], toks[rp])
-    else:
-        out, out_offsets = toks, offsets
-
-    res = KernelResult(out, out_offsets, n_detected.astype(np.int64),
-                       n_processed, had_marker,
-                       n_hidden=n_hidden.astype(np.int64),
-                       n_ivs=n_ivs.astype(np.int64),
-                       n_typo=n_typo.astype(np.int64))
-
+    res = KernelResult(
+        out, offsets + shift[before], n_detected, n_processed, n_detected > 0,
+        n_hidden=cnt[:, TYPE_HIDDEN], n_ivs=cnt[:, TYPE_IVS],
+        n_typo=cnt[:, TYPE_TYPOGRAPHIC] + cnt[:, _TYPE_REPLACED])
     if emit_events:
-        ls_ev, ln_ev = line_of(rep_pos, rep_row)
-        res.ev_offsets = np.searchsorted(rep_pos, offsets,
-                                         side="left").astype(np.int64)
-        res.ev_line_no = ln_ev.astype(np.int64)
-        res.ev_idx = (rep_pos - ls_ev).astype(np.int64)
-        res.ev_token = toks[rep_pos].astype(np.int64)
-        res.ev_type = cls[rep_pos].astype(np.int8)
-        action = np.full(rep_pos.size, ACT_DETECTED, dtype=np.int8)
-        if cfg.clean:
-            rem = hidden[rep_pos]
-            if ivs is not None:
-                rem |= ivs[rep_pos]
-            action[rem] = ACT_REMOVED
-            action[np.isin(rep_pos, bom_pos)] = ACT_BOM
-            if typo_replace is not None:
-                action[typo_replace[rep_pos]] = ACT_REPLACED
-        res.ev_action = action
+        res.ev_offsets = before
+        res.ev_line_no = 1 + k - np.searchsorted(nl, offsets[mrow])
+        res.ev_idx = mpos - line_start
+        res.ev_token = mtok.astype(np.int64)
+        res.ev_type = np.minimum(mcls, TYPE_TYPOGRAPHIC).astype(np.int8)
+        res.ev_action = _ACTIONS[int(cfg.clean)][mcls]
+        res.ev_action[is_bom] = ACT_BOM
     return res

@@ -57,7 +57,7 @@ _ACTION_NAMES = pa.array(
     type=pa.string())
 _DESCRIPTIONS = pa.array(kernel.DESC_STRINGS, type=pa.string())
 
-# tokens per kernel call: ~40 MB of kernel temporaries, and at 2^20 tokens
+# tokens per kernel call: ~13 MB of kernel temporaries, and at 2^20 tokens
 # the per-call overhead is already lost in the per-token cost
 KERNEL_SLICE_TOKENS = 1 << 20
 
@@ -153,7 +153,7 @@ def kernel_batches(in_col: str, cfg: DetectorConfig, passthrough: list[str],
 
     The kernel runs over row slices of at most :data:`KERNEL_SLICE_TOKENS`
     tokens (read when the body is built, so it travels with the pickled
-    function), one output batch per slice: its temporaries peak at ~39
+    function), one output batch per slice: its temporaries peak at ~13
     bytes per token, which a whole ``maxRecordsPerBatch`` batch would
     multiply."""
     build = _event_arrays if events else _row_arrays

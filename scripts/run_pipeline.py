@@ -112,9 +112,10 @@ def main() -> None:
                          "after its valid_from (default '1 hour')")
     ap.add_argument("--density", choices=("counters", "events"),
                     default="counters",
-                    help="'counters' (default): per-window density derived "
-                         "from the committed sink's per-sequence counters "
-                         "inside the single-pass foreachBatch; 'events': "
+                    help="'counters' (default): per-window density summed "
+                         "from the per-sequence counters by the kernel task "
+                         "that stages the batch's outputs, and published "
+                         "with them; 'events': "
                          "additionally run the stateful windowed-aggregate "
                          "path (salted two-phase agg over exploded "
                          "detection events in the state store) appending "
