@@ -179,6 +179,7 @@ def _class_lut(cfg: DetectorConfig) -> np.ndarray:
     ``_TYPE_REPLACED``.  Both end entries are 0, so clipping maps
     out-of-range tokens and excluded values onto "no marker"."""
     lut = CLASS_LUT.copy()
+    assert lut[0] == lut[-1] == 0  # what clipping relies on
     if not cfg.check_ivs:
         lut[lut == TYPE_IVS] = 0
     if not cfg.check_typographic:
